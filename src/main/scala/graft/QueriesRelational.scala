@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import graft.functions.{Ids, Redaction, Text, Vectors}
 import graft.operators.{Dedup, Relational, Sampling, Similarity}
 import QueryDsl._
@@ -660,7 +661,7 @@ private[graft] object QueriesRelational {
         .reduce(_ + _)
       val withB = pts.select(col("xi"), col("yi"),
         shiftright(zx + zy, 20).as("zb"), shiftright(col("xi"), 8).as("xb"))
-        .localCheckpoint()
+        .cut()
       def stats(layout: String, bucket: Column): DataFrame =
         withB.groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n"),
           (max(col("xi")) - min(col("xi"))).as("x_span"),
@@ -680,7 +681,7 @@ private[graft] object QueriesRelational {
       val vocab = tbl(s, dir, "part")
         .select(explode(split(col("p_name"), " ")).as("w"))
         .filter(length(col("w")) > 0).distinct()
-        .localCheckpoint()
+        .cut()
       val a = vocab.select(col("w").as("w1"), length(col("w")).as("l1"))
       val b = vocab.select(col("w").as("w2"), length(col("w")).as("l2"))
       a.join(b, col("w1") < col("w2")
@@ -702,7 +703,7 @@ private[graft] object QueriesRelational {
         .select(explode(split(col("p_name"), " ")).as("w"))
         .filter(length(col("w")) > 0).distinct()
         .select(col("w"), array_distinct(split(col("w"), "")).as("cs"))
-        .localCheckpoint()
+        .cut()
       val a = vocab.select(col("w").as("w1"), col("cs").as("ca"))
       val b = vocab.select(col("w").as("w2"), col("cs").as("cb"))
       a.join(b, col("w1") < col("w2"))
@@ -775,7 +776,7 @@ private[graft] object QueriesRelational {
       val vocab = tbl(s, dir, "part")
         .select(explode(split(col("p_name"), " ")).as("w"))
         .filter(length(col("w")) > 1).distinct()
-        .localCheckpoint()
+        .cut()
       val grams = vocab
         .select(col("w"), explode(sequence(lit(1), length(col("w")) - 1)).as("i"))
         .select(col("w"), expr("substring(w, i, 2)").as("g"))
@@ -803,7 +804,7 @@ private[graft] object QueriesRelational {
       val vocab = tbl(s, dir, "part")
         .select(explode(split(col("p_name"), " ")).as("w"))
         .filter(length(col("w")) > 0).distinct()
-        .localCheckpoint()
+        .cut()
       val a = vocab.select(col("w").as("w1"), length(col("w")).as("l1"))
       val b = vocab.select(col("w").as("w2"), length(col("w")).as("l2"))
       a.join(b, col("w1") < col("w2")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import graft.spatial.Geo
 import QueryDsl._
 
@@ -69,7 +70,7 @@ private[graft] object QueriesSpatial {
       // Noise points are absent from the output. Everything after the
       // grid join is degree- or core-sized.
       val pairs = Geo.gridNeighborPairs(custPoints(s, dir), "id", 400.0)
-        .localCheckpoint()
+        .cut()
       val sym = pairs.select(col("id_a").as("id"), col("id_b").as("nb"))
         .union(pairs.select(col("id_b").as("id"), col("id_a").as("nb")))
       val core = sym.groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -84,7 +85,7 @@ private[graft] object QueriesSpatial {
       // Cores whose neighbors are all non-core form singleton clusters.
       val singletons = core.join(comp, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("cluster"))
-      val coreLabels = comp.union(singletons).localCheckpoint()
+      val coreLabels = comp.union(singletons).cut()
       val border = sym
         .join(core.select(col("id")), Seq("id"), "left_anti")
         .join(coreLabels.select(col("id").as("nb"), col("cluster")), Seq("nb"))
@@ -139,7 +140,7 @@ private[graft] object QueriesSpatial {
       // and everything downstream was already degree-/core-sized.
       val eps = Geo.scaledEps(400.0, 1500L, tbl(s, dir, "customer").count())
       val pairs = Geo.gridNeighborPairs(custPoints(s, dir), "id", eps)
-        .localCheckpoint()
+        .cut()
       val sym = pairs.select(col("id_a").as("id"), col("id_b").as("nb"))
         .union(pairs.select(col("id_b").as("id"), col("id_a").as("nb")))
       val core = sym.groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -153,7 +154,7 @@ private[graft] object QueriesSpatial {
         .select(col("vertex").as("id"), col("component").as("cluster"))
       val singletons = core.join(comp, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("cluster"))
-      val coreLabels = comp.union(singletons).localCheckpoint()
+      val coreLabels = comp.union(singletons).cut()
       val border = sym
         .join(core.select(col("id")), Seq("id"), "left_anti")
         .join(coreLabels.select(col("id").as("nb"), col("cluster")), Seq("nb"))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import QueryDsl._
 
 /** Query registry, statistics/evaluation tier II (q275+): forecast
@@ -31,14 +32,14 @@ private[graft] object QueriesStats {
       // days. |errors| sum as EXACT integer cents (MASE is a ratio of
       // two exact sums); the per-day ratio statistics (MAPE, sMAPE)
       // fold ordered by day with a 12-dp fixed point.
-      val idx = dailyIdx(s, dir).localCheckpoint()
+      val idx = dailyIdx(s, dir).cut()
       val n = idx.agg(max(col("t")).as("n"))
       val lagged = idx.as("a")
         .join(idx.as("b"), col("a.t") === col("b.t") + 7)
         .select(col("a.t").as("t"), col("a.x").as("actual"),
           col("b.x").as("pred"))
         .crossJoin(broadcast(n))
-        .localCheckpoint()
+        .cut()
       val hold = lagged.filter(col("t") > col("n") - 28)
       val insample = lagged.filter(col("t") <= col("n") - 28)
       def d(c: Column): Column = c.cast("double")
@@ -80,11 +81,11 @@ private[graft] object QueriesStats {
             .as("x")),
         Seq(("month", true)), "t")
         .select(col("t"), col("x"))
-        .localCheckpoint()
+        .cut()
       val slopes = m.as("a").join(m.as("b"), col("b.t") > col("a.t"))
         .select(((col("b.x") - col("a.x")).cast("double")
           / (col("b.t") - col("a.t")).cast("double")).as("slope"))
-        .localCheckpoint()
+        .cut()
       val cnt = slopes.count() // bounded: month-grid² pairs
       val k1 = ((cnt + 1) / 2).toInt
       val k2 = (cnt / 2 + 1).toInt
@@ -129,7 +130,7 @@ private[graft] object QueriesStats {
       val cum = operators.ScalableWindow.bandedCumSums(grid, "doc_id",
           descending = false, Nil,
           Seq("ntok" -> "cumtok", "nnew" -> "cumvoc", "one" -> "rn"))
-        .localCheckpoint()
+        .cut()
       val nd = cum.agg(max(col("rn")).as("nd"))
       // Checkpoint rule shared with the oracle: rn divisible by
       // ceil(nd/20), plus the final point.
@@ -165,7 +166,7 @@ private[graft] object QueriesStats {
         least(floor(col("l_extendedprice") / 4000.0).cast("long"), lit(25L))
           .as("pb"))
       val cells = li.groupBy(col("q"), col("pb")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       val conc = cells.as("a").join(cells.as("b"),
           col("b.q") > col("a.q") && col("b.pb") > col("a.pb"))
@@ -205,7 +206,7 @@ private[graft] object QueriesStats {
           graft.functions.Text.tokens(col("text")), langMarkers).as("r1"),
         graft.plans.TextKernels.langIdNative(col("text"), ngramProfiles).as("r2"))
       val cm = both.groupBy(col("r1"), col("r2")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       val n = cm.agg(sum(col("c")).as("n"))
       val po = cm.filter(col("r1") === col("r2")).agg(sum(col("c")).as("agree"))
@@ -237,7 +238,7 @@ private[graft] object QueriesStats {
       val vd = col("v").cast("decimal(38,0)")
       val g = c.groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg"), sum(vd * vd).as("qg"))
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       val tot = g.agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
         sum(col("sg")).as("s"), sum(col("qg")).as("q"))
@@ -284,7 +285,7 @@ private[graft] object QueriesStats {
         .withColumn("f1", when(col("precision") + col("recall") > 0,
           lit(2.0) * col("precision") * col("recall")
             / (col("precision") + col("recall"))).otherwise(lit(0.0)))
-        .localCheckpoint()
+        .cut()
       val macroRow = per.agg(
         aggregate(array_sort(collect_list(struct(col("lang"), col("f1").as("v")))),
           lit(0.0), (acc, e) => round(acc + e.getField("v"), 12)).as("sf1"),
@@ -323,11 +324,11 @@ private[graft] object QueriesStats {
         .select(coalesce(col("component"), col("vec_id")).as("community"),
           col("label"))
         .groupBy(col("community"), col("label")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       val n = grid.agg(sum(col("c")).as("n"))
       val byC = grid.groupBy(col("community")).agg(sum(col("c")).as("nc"),
-        max(col("c")).as("mx")).localCheckpoint()
+        max(col("c")).as("mx")).cut()
       val byN = grid.groupBy(col("label")).agg(sum(col("c")).as("nn"))
       def entFold(df: DataFrame, key: Column, cnt: Column, out: String) =
         df.crossJoin(broadcast(n))
@@ -397,7 +398,7 @@ private[graft] object QueriesStats {
       val g = e.groupBy(col("band")).agg(
         sum(when(col("h"), 1L).otherwise(0L)).as("c1"),
         sum(when(col("h"), 0L).otherwise(1L)).as("c2"))
-        .localCheckpoint()
+        .cut()
       val tot = g.agg(sum(col("c1")).as("t1"), sum(col("c2")).as("t2"))
       def d(c: Column): Column = c.cast("double")
       val terms = g.crossJoin(broadcast(tot))
@@ -407,7 +408,7 @@ private[graft] object QueriesStats {
               * log((d(col("c1")) / d(col("t1")))
                 / (d(col("c2")) / d(col("t2")))))
             .otherwise(lit(0.0)).as("term"))
-        .localCheckpoint()
+        .cut()
       val psi = terms.agg(
         aggregate(array_sort(collect_list(struct(col("band"),
             col("term").as("t")))), lit(0.0),
@@ -484,12 +485,12 @@ private[graft] object QueriesStats {
         .agg(count(lit(1)).as("nd"), sum(col("x")).as("sx"),
           max(col("x")).as("mx"), min(col("x")).as("mn"))
         .filter(col("nd") === 7) // only full subgroups
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       val xbar = d(col("sx")) / lit(7.0)
       val weekStats = weeks.select(col("wk"), xbar.as("xbar"),
         (d(col("mx")) - d(col("mn"))).as("r"))
-        .localCheckpoint()
+        .cut()
       // Centers from EXACT integer sums, one double division each
       // (roundlint r11): the first cut folded the per-week DOUBLES with
       // 6-dp step rounds, but at cents magnitude ~1e8 the step round is
@@ -522,7 +523,7 @@ private[graft] object QueriesStats {
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .agg(sum(expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)"))
           .as("x"))
-        .localCheckpoint()
+        .cut()
       val xd = col("x").cast("decimal(38,0)")
       val g = m.agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
         sum(xd * xd).as("s2"))
@@ -544,7 +545,7 @@ private[graft] object QueriesStats {
       // re-ranked after dropping median-equal days), z from the
       // closed-form run moments — integers everywhere until the final
       // division.
-      val idx = dailyIdx(s, dir).localCheckpoint()
+      val idx = dailyIdx(s, dir).cut()
       val cnt = idx.count() // bounded: day-grid size
       val k1 = ((cnt + 1) / 2).toInt
       val k2 = (cnt / 2 + 1).toInt
@@ -558,7 +559,7 @@ private[graft] object QueriesStats {
         .select(col("t"), (col("x").cast("double") > col("med")).as("up"))
       val ranked = operators.ScalableWindow
         .boundedRankCum(signs, Seq(("t", true)), "r")
-        .localCheckpoint()
+        .cut()
       val flips = ranked.as("a")
         .join(ranked.as("b"), col("b.r") === col("a.r") + 1)
         .agg(sum(when(col("a.up") =!= col("b.up"), 1L).otherwise(0L)).as("fl"))
@@ -617,14 +618,14 @@ private[graft] object QueriesStats {
         .select(col("source"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
         .groupBy(col("source")).agg(sum(col("ntok")).as("tok"))
-        .localCheckpoint()
+        .cut()
       val tot = counts.agg(sum(col("tok")).as("tt"))
       // Exact integer floor quota: (tok * 1000) div tt; remainder
       // compared as the exact integer tok*1000 − floor*tt (no floats).
       val q = counts.crossJoin(broadcast(tot))
         .withColumn("fl", expr("div(tok * 1000, tt)"))
         .withColumn("rem", col("tok") * 1000 - col("fl") * col("tt"))
-        .localCheckpoint()
+        .cut()
       val ranked = operators.ScalableWindow.boundedRankCum(
         q.select(col("source"), col("tok"), col("fl"), col("rem")),
         Seq(("rem", false), ("source", true)), "rk")
@@ -647,7 +648,7 @@ private[graft] object QueriesStats {
         .agg(min(col("p_partkey")).as("k"), count(lit(1)).as("n"),
           max(col("p_retailprice").cast(dec)).as("mx"))
         .withColumn("blk", split(col("p_name"), " ").getItem(0))
-        .localCheckpoint()
+        .cut()
       val a = classes.select(col("blk"), col("p_name").as("name_a"),
         col("k").as("key_a"))
       val b = classes.select(col("blk"), col("p_name").as("name_b"),
@@ -685,14 +686,14 @@ private[graft] object QueriesStats {
         .agg(count(lit(1)).as("n"),
           sum(when(col("y"), 1L).otherwise(0L)).as("pos"),
           sum(col("v").cast("decimal(38,0)")).as("sv"))
-        .localCheckpoint()
+        .cut()
       val tot = binned.agg(sum(col("n")).as("tn"))
       def d(c: String): Column = col(c).cast("double")
       val withConf = binned.crossJoin(broadcast(tot))
         .withColumn("conf",
           d("sv") / lit(4294967296.0) / d("n"))
         .withColumn("acc", d("pos") / d("n"))
-        .localCheckpoint()
+        .cut()
       val ece = withConf.agg(
         aggregate(array_sort(collect_list(struct(col("bin"),
             ((d("n") / d("tn")) * abs(col("acc") - col("conf"))).as("e")))),
@@ -861,7 +862,7 @@ private[graft] object QueriesStats {
       val grid = v.groupBy(col("v"))
         .agg(sum(when(col("g1"), 1L).otherwise(0L)).as("c1"),
           sum(when(col("g1"), 0L).otherwise(1L)).as("c2"))
-        .localCheckpoint()
+        .cut()
       // Both ECDFs share one banded pass (r13): the chained form
       // re-evaluated the order⋈segment grid per call (3 references
       // each); the multi-column form cuts/windows/offsets once.
@@ -896,7 +897,7 @@ private[graft] object QueriesStats {
             .as("sp"),
           count(lit(1)).as("cnt"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("ret"))
-        .localCheckpoint()
+        .cut()
       def dd(c: Column): Column = c.cast("decimal(19,0)")
       val pr = g.as("a").join(g.as("b"),
           col("a.brand") < col("b.brand"))
@@ -946,7 +947,7 @@ private[graft] object QueriesStats {
         .agg(count(lit(1)).as("ni"), sum(col("z")).as("sz"),
           sum(col("z").cast("decimal(19,0)") * col("z").cast("decimal(19,0)"))
             .as("szz"))
-        .localCheckpoint()
+        .cut()
       val k = grp.agg(count(lit(1)).as("k"), sum(col("ni")).as("nn"),
         sum(col("sz").cast("decimal(19,0)")).as("gz"))
       def d(c: Column): Column = c.cast("double")
@@ -1112,7 +1113,7 @@ private[graft] object QueriesStats {
       // exact moment aggregate (closed forms — no per-row residual sum,
       // so no float-order hazard); each day's leverage and D are then
       // pure per-row expressions and the head is TakeOrderedAndProject.
-      val idx = dailyIdx(s, dir).localCheckpoint()
+      val idx = dailyIdx(s, dir).cut()
       def d19(c: String): Column = col(c).cast("decimal(19,0)")
       val m = idx.agg(count(lit(1)).as("n"),
         sum(col("t")).as("st"), sum(col("x")).as("sx"),
@@ -1196,7 +1197,7 @@ private[graft] object QueriesStats {
       val td = tbl(s, dir, "documents")
         .select(col("doc_id"), explode(functions.Text.tokens(col("text"))).as("term"))
         .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val top = td.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("term").asc).limit(20)
       val nDocs = tbl(s, dir, "documents").agg(count(lit(1)).as("nd"))
@@ -1221,7 +1222,7 @@ private[graft] object QueriesStats {
       val st = tbl(s, dir, "documents")
         .select(col("source"), explode(functions.Text.tokens(col("text"))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val vocab = st.groupBy(col("term")).agg(sum(col("cnt")).as("tc"))
         .orderBy(col("tc").desc, col("term").asc).limit(200)
         .select(col("term"))
@@ -1260,7 +1261,7 @@ private[graft] object QueriesStats {
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("m"))
         .agg(expr(s"sum(cast(cast(o_totalprice as $dec) * 100 as bigint))")
           .as("x"))
-        .localCheckpoint()
+        .cut()
       val pr = monthly.as("a").join(monthly.as("b"), col("a.m") < col("b.m"))
         .agg(sum(signum((col("b.x") - col("a.x")).cast("double")).cast("long"))
           .as("s_stat"))
@@ -1374,7 +1375,7 @@ private[graft] object QueriesStats {
         .select(col("c_mktsegment").as("g"),
           expr(s"cast(cast(o_totalprice as $dec) * 100 as bigint)").as("v"))
       val cells = v.groupBy(col("v"), col("g")).agg(count(lit(1)).as("cgv"))
-        .localCheckpoint()
+        .cut()
       val grid = cells.groupBy(col("v")).agg(sum(col("cgv")).as("cnt"))
       val cum = operators.ScalableWindow
         .bandedCumSum(grid, "v", descending = false, Nil, "cnt", "cum")
@@ -1432,7 +1433,7 @@ private[graft] object QueriesStats {
       val withAvg = ranked.join(tieSizes, Seq("m", "x"))
         .select(col("nat"), col("m"),
           (col("mr") * 2 + col("tsz") - 1).as("avg2"))
-        .localCheckpoint()
+        .cut()
       val perNat = withAvg.groupBy(col("nat"))
         .agg(sum(col("avg2")).as("r2j"), count(lit(1)).as("nb"))
       def d(c: Column): Column = c.cast("double")
@@ -1463,7 +1464,7 @@ private[graft] object QueriesStats {
           .cast("decimal(38,0)").as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .select(col("t"), col("x")).localCheckpoint()
+        .select(col("t"), col("x")).cut()
       def d19(c: Column): Column = c.cast("decimal(19,0)")
       val m = idx.agg(count(lit(1)).as("n"),
         sum(col("t")).as("st"), sum(d19(col("t")) * d19(col("t"))).as("stt"),
@@ -1498,7 +1499,7 @@ private[graft] object QueriesStats {
           .cast("decimal(38,0)").as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .select(col("t"), col("x")).localCheckpoint()
+        .select(col("t"), col("x")).cut()
       val glob = idx.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"))
       val lags = s.range(1, 8).select(col("id").as("lag"))
@@ -1580,7 +1581,7 @@ private[graft] object QueriesStats {
         .groupBy(col("p_brand").as("brand"))
         .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("a"),
           sum(when(col("l_returnflag") === "R", 0L).otherwise(1L)).as("b"))
-        .localCheckpoint()
+        .cut()
       val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
       def d(c: Column): Column = c.cast("double")
       def d19(c: Column): Column = c.cast("decimal(19,0)")
@@ -1620,7 +1621,7 @@ private[graft] object QueriesStats {
           sum(when(col("yr") === 1996, col("rev")).otherwise(0L)).as("r1"),
           sum(when(col("yr") === 1996, col("qty")).otherwise(0L)).as("q1"))
         .filter(col("q0") > 0 && col("q1") > 0)
-        .localCheckpoint()
+        .cut()
       def d(c: String): Column = col(c).cast("double")
       val tot = wide.agg(count(lit(1)).as("n_brands"),
         sum(col("r0")).as("sr0"), sum(col("r1")).as("sr1"))
@@ -1688,7 +1689,7 @@ private[graft] object QueriesStats {
         .agg(count(lit(1)).as("cnt"))
         .select(col("v"), col("cnt"),
           (col("v").cast("decimal(38,0)") * col("cnt")).as("sv"))
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.bandedCumSums(grid, "v",
         descending = false, Nil, Seq("cnt" -> "cumn", "sv" -> "cums"))
       val tot = grid.agg(sum(col("cnt")).as("n"), sum(col("sv")).as("stot"))
@@ -1818,7 +1819,7 @@ private[graft] object QueriesStats {
           .as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .select(col("t"), col("x")).localCheckpoint()
+        .select(col("t"), col("x")).cut()
       val nTot = idx.agg(max(col("t")).as("nn"))
       val sizes = s.createDataFrame(Seq(16, 32, 64, 128).map(Tuple1(_)))
         .toDF("bs")
@@ -1826,7 +1827,7 @@ private[graft] object QueriesStats {
         .crossJoin(broadcast(nTot))
         .withColumn("blk", expr("(t - 1) div bs"))
         .filter((col("blk") + 1) * col("bs") <= col("nn"))
-        .localCheckpoint()
+        .cut()
       val w = Window.partitionBy(col("bs"), col("blk")).orderBy(col("t").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val q19 = (c: Column) => c.cast("decimal(19,0)")
@@ -1881,7 +1882,7 @@ private[graft] object QueriesStats {
           .as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t", Seq(("x", "cum")))
-        .localCheckpoint()
+        .cut()
       val tot = idx.agg(max(col("t")).as("nn"), sum(col("x")).as("ss"))
       def d(c: String): Column = col(c).cast("double")
       val gains = idx.crossJoin(broadcast(tot))
@@ -2110,7 +2111,7 @@ private[graft] object QueriesStats {
         .filter(col("nxt").isNotNull)
         .groupBy(col("event_type").as("cur"), col("nxt"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val marg = pairs.groupBy(col("cur")).agg(sum(col("cnt")).as("rt"))
       val tot = pairs.agg(sum(col("cnt")).as("gt"))
       def d(c: String): Column = col(c).cast("double")
@@ -2184,7 +2185,7 @@ private[graft] object QueriesStats {
           .as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .localCheckpoint()
+        .cut()
       val nTot = idx.agg(max(col("t")).as("nn"))
       val ctr = idx.crossJoin(broadcast(nTot))
         .filter(col("t") >= 4 && col("t") <= col("nn") - 3)
@@ -2225,11 +2226,11 @@ private[graft] object QueriesStats {
           sum(when(col("g1"), 0L).otherwise(1L)).as("cb"))
         .withColumn("sa", col("v").cast("decimal(38,0)") * col("ca"))
         .withColumn("sb", col("v").cast("decimal(38,0)") * col("cb"))
-        .localCheckpoint()
+        .cut()
       val grid = operators.ScalableWindow.bandedCumSums(grid0, "v",
         descending = false, Nil,
         Seq("ca" -> "cca", "cb" -> "ccb", "sa" -> "csa", "sb" -> "csb"))
-        .localCheckpoint()
+        .cut()
       val tot = grid0.agg(sum(col("ca")).as("n"), sum(col("cb")).as("m"),
         sum(col("sa")).as("sat"), sum(col("sb")).as("sbt"))
       val d38 = (c: Column) => c.cast("decimal(38,0)")
@@ -2275,11 +2276,11 @@ private[graft] object QueriesStats {
           sum(when(col("g1"), 0L).otherwise(1L)).as("cb"))
         .withColumn("sa", col("v").cast("decimal(38,0)") * col("ca"))
         .withColumn("sb", col("v").cast("decimal(38,0)") * col("cb"))
-        .localCheckpoint()
+        .cut()
       val grid = operators.ScalableWindow.bandedCumSums(grid0, "v",
         descending = false, Nil,
         Seq("ca" -> "cca", "cb" -> "ccb", "sa" -> "csa", "sb" -> "csb"))
-        .localCheckpoint()
+        .cut()
       val tot = grid0.agg(sum(col("ca")).as("n"), sum(col("cb")).as("m"),
         sum(col("sa")).as("sat"), sum(col("sb")).as("sbt"))
       val d38 = (c: Column) => c.cast("decimal(38,0)")
@@ -2312,7 +2313,7 @@ private[graft] object QueriesStats {
       val cells = tbl(s, dir, "orders")
         .select(col("o_orderpriority").as("x"), col("o_orderstatus").as("y"))
         .groupBy(col("x"), col("y")).agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .cut()
       val tot = cells.agg(sum(col("n")).as("nn"))
       def d(c: String): Column = col(c).cast("double")
       def hFold(df: DataFrame, keys: Seq[Column], out: String): DataFrame =
@@ -2346,7 +2347,7 @@ private[graft] object QueriesStats {
           .as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .select(col("t"), col("x")).localCheckpoint()
+        .select(col("t"), col("x")).cut()
       val trip = idx.as("c")
         .join(idx.as("l"), col("c.t") === col("l.t") + 1)
         .join(idx.as("r"), col("c.t") === col("r.t") - 1)
@@ -2403,7 +2404,7 @@ private[graft] object QueriesStats {
           .cast("decimal(38,0)").as("x"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
-        .select(col("t"), col("x")).localCheckpoint()
+        .select(col("t"), col("x")).cut()
       val pairs = idx.as("a").join(idx.as("b"), col("a.t") === col("b.t") + 7)
         .select(col("a.x").as("act"), col("b.x").as("pred"))
       def d(c: String): Column = col(c).cast("double")
@@ -2431,7 +2432,7 @@ private[graft] object QueriesStats {
           explode(graft.functions.Text.tokens(lower(col("text")))).as("tok"))
         .filter(length(col("tok")) > 0)
         .select(col("source"), col("tok")).distinct()
-        .localCheckpoint()
+        .cut()
       val hashed = toks.select(col("source"), col("tok"),
         graft.plans.TextKernels.unitHashNative(concat(lit("kmv_"),
           col("tok"))).as("h"))
@@ -2536,7 +2537,7 @@ private[graft] object QueriesStats {
         .groupBy(col("n_name"))
         .agg(sum(when(col("v") > col("med"), 1L).otherwise(0L)).as("n_above"),
           count(lit(1)).as("n_total"))
-        .localCheckpoint()
+        .cut()
       val tot = cells.agg(sum(col("n_above")).as("ga"), sum(col("n_total")).as("gn"))
       val e = col("n_total").cast("double") * col("ga").cast("double") /
         col("gn").cast("double")
@@ -2562,7 +2563,7 @@ private[graft] object QueriesStats {
       val cells = o.join(c, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey").as("nk"), col("prio"))
         .agg(count(lit(1)).as("n_obs"))
-        .localCheckpoint()
+        .cut()
       val rm = cells.groupBy(col("nk")).agg(sum(col("n_obs")).as("rt"))
       val cm = cells.groupBy(col("prio")).agg(sum(col("n_obs")).as("ct"))
       val rc = cells.agg(countDistinct(col("nk")).as("r"),
@@ -2607,7 +2608,7 @@ private[graft] object QueriesStats {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("n_name"), col("p_brand"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val tot = cnt.groupBy(col("n_name")).agg(sum(col("cnt")).as("tot"))
       val pr = col("cnt").cast("double") / col("tot").cast("double")
       cnt.join(tot, Seq("n_name"))
@@ -2694,7 +2695,7 @@ private[graft] object QueriesStats {
       // Hoover (Robin Hood) index, EXACT: |x − μ| = |n·x − S| / n, so
       // Σ|x − μ| / (2·n·μ) = Σ|n·x − S| / (2·n·S) — the numerator is an
       // exact DECIMAL(38,0) integer sum, the index one double division.
-      val base = spendPerCustomer(s, dir).localCheckpoint()
+      val base = spendPerCustomer(s, dir).cut()
       val agg1 = base.groupBy(col("nation"))
         .agg(count(lit(1)).as("n"), sum(col("x").cast("decimal(38,0)")).as("st"))
       base.join(broadcast(agg1), Seq("nation"))
@@ -2723,7 +2724,7 @@ private[graft] object QueriesStats {
       val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
       val base = li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .select(col("p_brand"), col("x"), col("y"))
-        .localCheckpoint()
+        .cut()
       def d38(c: Column) = c.cast("decimal(38,0)")
       def sums(df: DataFrame, keys: Seq[Column]) = df
         .groupBy(keys: _*)
@@ -2781,7 +2782,7 @@ private[graft] object QueriesStats {
         transform(sequence(lit(1), lit(10)), i =>
           aggregate(slice(col("g"), lit(1), i), lit(0.0), _ + _) /
             aggregate(col("g"), lit(0.0), _ + _)).as("lz"))
-        .localCheckpoint()
+        .cut()
       val a = lor.select(col("nation").as("na"), col("lz").as("la"))
       val b = lor.select(col("nation").as("nb"), col("lz").as("lb"))
       a.join(broadcast(b), col("na") < col("nb"))
@@ -2803,7 +2804,7 @@ private[graft] object QueriesStats {
       // the within terms reuse the q378 decile-grid Theil (declared
       // grid semantics). Output is one row per nation with its two
       // contributions — they sum to the decomposed total.
-      val base = spendPerCustomer(s, dir).localCheckpoint()
+      val base = spendPerCustomer(s, dir).cut()
       val g = base.groupBy(col("nation"))
         .agg(count(lit(1)).as("ng"), sum(col("x").cast("decimal(38,0)")).as("sg"))
       val tot = g.agg(sum(col("ng")).as("n"), sum(col("sg")).as("st"))
@@ -2837,7 +2838,7 @@ private[graft] object QueriesStats {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("n_name"), col("p_brand"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       weightedJaccardFinish(cnt)
     }),
 
@@ -2850,7 +2851,7 @@ private[graft] object QueriesStats {
       val li = tbl(s, dir, "lineitem")
         .select(col("l_quantity").cast("double").as("x"),
           col("l_extendedprice").cast("double").as("y"))
-        .localCheckpoint()
+        .cut()
       val q = li.agg(expr("percentile(x, 0.95)").as("qx"),
         expr("percentile(y, 0.95)").as("qy"))
       li.crossJoin(broadcast(q))
@@ -2906,7 +2907,7 @@ private[graft] object QueriesStats {
       val gs = li.groupBy(col("g"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("x") * col("x")).as("sxx"))
-        .localCheckpoint()
+        .cut()
       def side(f: String, sfx: String) = gs.filter(col("g") === f)
         .select(col("n").as("n" + sfx), col("sx").as("sx" + sfx),
           col("sxx").as("sxx" + sfx))
@@ -2946,7 +2947,7 @@ private[graft] object QueriesStats {
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
           sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"),
           sum(col("x") * col("y")).as("sxy"))
-        .localCheckpoint()
+        .cut()
       def side(f: String, sfx: String) = gs.filter(col("g") === f)
         .select(Seq("n", "sx", "sy", "sxx", "syy", "sxy")
           .map(c => col(c).as(c + sfx)): _*)
@@ -2995,7 +2996,7 @@ private[graft] object QueriesStats {
       val base = per.join(c, col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .select(col("n_name").as("nation"), col("x"), col("y"))
-        .localCheckpoint()
+        .cut()
       val d38 = "decimal(38,0)"
       val stats = base.agg(count(lit(1)).as("n"),
         sum(col("x").cast(d38)).as("sx"), sum(col("y").cast(d38)).as("sy"),
@@ -3110,7 +3111,7 @@ private[graft] object QueriesStats {
       val g = p.groupBy(col("p_brand"))
         .agg(count(lit(1)).as("nj"), sum(col("x").cast(d38)).as("sx"),
           sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"))
-        .localCheckpoint()
+        .cut()
       val terms = g.select(col("p_brand"),
         ((col("nj").cast(d38) * col("sxx") - col("sx") * col("sx"))
           .cast("double") / col("nj").cast("double")).as("wj"),
@@ -3146,7 +3147,7 @@ private[graft] object QueriesStats {
       val st = tbl(s, dir, "documents")
         .select(col("source"), explode(functions.Text.tokens(col("text"))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val vocab = st.groupBy(col("term")).agg(sum(col("cnt")).as("tc"))
         .orderBy(col("tc").desc, col("term").asc).limit(200)
         .select(col("term"))
@@ -3241,7 +3242,7 @@ private[graft] object QueriesStats {
         .select(col("c_custkey"), coalesce(col("x"), lit(0L)).as("x"),
           coalesce(col("y"), lit(0L)).as("y"),
           pmod(col("c_custkey"), lit(2)).as("arm"))
-        .localCheckpoint()
+        .cut()
       val pooled = base.agg(count(lit(1)).as("n"),
         sum(col("x").cast(d38)).as("sx"), sum(col("y").cast(d38)).as("sy"),
         sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"),
@@ -3293,7 +3294,7 @@ private[graft] object QueriesStats {
         .select(col("c_custkey"), coalesce(col("x"), lit(0L)).as("x"),
           coalesce(col("y"), lit(0L)).as("y"),
           pmod(col("c_custkey"), lit(2)).as("arm"))
-        .localCheckpoint()
+        .cut()
       val bounds = base.agg(
         expr("percentile(CAST(x AS DOUBLE), 0.2)").as("b1"),
         expr("percentile(CAST(x AS DOUBLE), 0.4)").as("b2"),
@@ -3356,7 +3357,7 @@ private[graft] object QueriesStats {
         .groupBy(col("n_name").as("nation"), col("g"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("x") * col("x")).as("sxx"))
-        .localCheckpoint()
+        .cut()
       def side(f: String, sfx: String) = gs.filter(col("g") === f)
         .select(col("nation"), col("n").as("n" + sfx),
           col("sx").as("sx" + sfx), col("sxx").as("sxx" + sfx))
@@ -3372,7 +3373,7 @@ private[graft] object QueriesStats {
             col("n1").cast("double") +
             variance(col("n2"), col("sx2"), col("sxx2")) /
             col("n2").cast("double")).as("v"))
-        .localCheckpoint()
+        .cut()
       def fold(w: Column, nm: String) =
         aggregate(array_sort(collect_list(struct(col("nation"), w.as(nm)))),
           lit(0.0), (acc, e) => acc + e.getField(nm))
@@ -3436,11 +3437,11 @@ private[graft] object QueriesStats {
       val per = o.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("score"),
           sum(when(col("yr") === 1997, col("cents")).otherwise(0L)).as("y97"))
-        .localCheckpoint()
+        .cut()
       val med = per.agg(expr("percentile(CAST(y97 AS DOUBLE), 0.5)").as("md"))
       val lab = per.crossJoin(broadcast(med))
         .select(col("score"), (col("y97") > col("md")).as("pos"))
-        .localCheckpoint()
+        .cut()
       val qs = (1 to 9).map(i => 0.1 * i)
       val grid = lab.agg(
         expr(s"percentile(CAST(score AS DOUBLE), array(${qs.mkString(",")}))")
@@ -3521,7 +3522,7 @@ private[graft] object QueriesStats {
       val per = o.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("cnt"),
           sum(when(col("yr") === 1997, col("cents")).otherwise(0L)).as("y97"))
-        .localCheckpoint()
+        .cut()
       val mx = per.agg(max(col("cnt")).as("mc"),
         expr("percentile(CAST(y97 AS DOUBLE), 0.5)").as("md"))
       val binned = per.crossJoin(broadcast(mx))
@@ -3531,7 +3532,7 @@ private[graft] object QueriesStats {
       val bins = binned.groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("cnt")).as("scnt"),
           sum(col("pos")).as("npos"), max(col("mc")).as("mc"))
-        .localCheckpoint()
+        .cut()
       val tot = bins.agg(sum(col("n")).as("nn"))
       val conf = col("scnt").cast("double") /
         (col("n") * col("mc")).cast("double")
@@ -3559,7 +3560,7 @@ private[graft] object QueriesStats {
         (col("l_extendedprice").cast(dec) * 100).cast("long").as("r"))
       // Checkpointed: feeds both the banded pass and the revenue total.
       val per = li.groupBy(col("l_partkey")).agg(sum(col("r")).as("rev"))
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.bandedCumSum(per, "rev",
         descending = true, Seq("l_partkey"), "rev", "cum")
       val tot = per.agg(sum(col("rev")).as("trev"))
@@ -3677,7 +3678,7 @@ private[graft] object QueriesStats {
           (col("y97") > col("md")).cast("long").as("pos"))
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"))
-        .localCheckpoint()
+        .cut()
       val j = bins.select(col("bin").as("j"))
       val k = bins.select(col("bin").as("k"))
       val ivals = j.crossJoin(k).filter(col("j") <= col("k"))
@@ -3711,7 +3712,7 @@ private[graft] object QueriesStats {
         .filter(col("prev").isNotNull)
         .select(col("nation"), col("t"),
           abs(col("c") - col("prev")).as("ad"))
-        .localCheckpoint()
+        .cut()
       val cal = deltas.filter(col("t") % 2 === 0)
       val qhat = cal.groupBy(col("nation"))
         .agg(count(lit(1)).as("n_cal"),
@@ -3742,7 +3743,7 @@ private[graft] object QueriesStats {
       // engines, so the product needs no per-term rounding (the ordered-
       // fold contract extended to ×, replayed by DuckDB list_reduce).
       val grid = lifetimeGrid(lifetimes(s, dir))
-      val atRisk = grid.filter(col("d") > 0).localCheckpoint()
+      val atRisk = grid.filter(col("d") > 0).cut()
       val facts = atRisk.agg(array_sort(collect_list(struct(col("t"),
         (lit(1.0) - col("d").cast("double") / col("n_risk").cast("double"))
           .as("f")))).as("arr"))
@@ -3758,7 +3759,7 @@ private[graft] object QueriesStats {
       // H(t) = Σ_{tᵢ ≤ t} dᵢ/nᵢ — an ordered prefix SUM of exact-integer
       // divisions (identical doubles both engines; fold order = t asc).
       val grid = lifetimeGrid(lifetimes(s, dir))
-      val atRisk = grid.filter(col("d") > 0).localCheckpoint()
+      val atRisk = grid.filter(col("d") > 0).cut()
       val terms = atRisk.agg(array_sort(collect_list(struct(col("t"),
         (col("d").cast("double") / col("n_risk").cast("double"))
           .as("h")))).as("arr"))
@@ -3782,7 +3783,7 @@ private[graft] object QueriesStats {
       val c = tbl(s, dir, "customer").select(col("c_custkey").as("ck"),
         (col("c_mktsegment") === "BUILDING").as("a1"))
       // Checkpointed: consumed by both the event grid and nTot.
-      val lt = lifetimes(s, dir).join(c, Seq("ck")).localCheckpoint()
+      val lt = lifetimes(s, dir).join(c, Seq("ck")).cut()
       val grid = lt.groupBy(col("t"))
         .agg(sum(when(col("a1"), 1L).otherwise(0L)).as("c1"),
           sum(when(col("a1"), col("ev")).otherwise(0L)).as("d1"),
@@ -3839,7 +3840,7 @@ private[graft] object QueriesStats {
           col("x").cast("decimal(19,0)") * col("x").cast("decimal(19,0)"))
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t", Seq(("x2", "cum2")))
-        .localCheckpoint()
+        .cut()
       val tot = idx.agg(max(col("t")).as("nn"), sum(col("x2")).as("ss"))
       def d(c: String): Column = col(c).cast("double")
       val dt = idx.crossJoin(broadcast(tot))
@@ -3864,7 +3865,7 @@ private[graft] object QueriesStats {
           .as("y"))
       val idx = operators.ScalableWindow
         .boundedRankCum(m, Seq(("month", true)), "t")
-        .localCheckpoint()
+        .cut()
       def d(c: String): Column = col(c).cast("double")
       val mom = idx.agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
         sum(col("t") * col("t")).as("stt"), sum(col("y")).as("sy"),
@@ -3909,7 +3910,7 @@ private[graft] object QueriesStats {
           pmod(datediff(col("o_orderdate").cast("date"),
             to_date(lit("1970-01-01"))), lit(7)).as("w"))
       val cells = o.groupBy(col("nation"), col("w"))
-        .agg(count(lit(1)).as("c1")).localCheckpoint()
+        .agg(count(lit(1)).as("c1")).cut()
       val corp = cells.groupBy(col("w")).agg(sum(col("c1")).as("cc"))
       val grid = cells.select(col("nation")).distinct()
         .crossJoin(corp)
@@ -3920,7 +3921,7 @@ private[graft] object QueriesStats {
       // nc is the pooled corpus total: sum the weekday MARGINAL (corp),
       // not the per-nation grid — the grid repeats each cc once per
       // nation, which would inflate nc by #nations and collapse F2.
-      val nc = corp.agg(sum(col("cc")).as("nc")).localCheckpoint()
+      val nc = corp.agg(sum(col("cc")).as("nc")).cut()
       def d(c: Column): Column = c.cast("double")
       val withCum = grid
         .withColumn("f1", sum(col("c1")).over(
@@ -3956,7 +3957,7 @@ private[graft] object QueriesStats {
           .as("y"))
       val idx = operators.ScalableWindow
         .boundedRankCum(m, Seq(("month", true)), "t")
-        .select(col("t"), col("y")).localCheckpoint()
+        .select(col("t"), col("y")).cut()
       val slopes = idx.as("a").join(idx.as("b"), col("a.t") =!= col("b.t"))
         .select(col("a.t").as("i"),
           ((col("b.y") - col("a.y")).cast("double")
@@ -3983,7 +3984,7 @@ private[graft] object QueriesStats {
         .groupBy(col("n_name").as("nation"))
         .agg(sum(expr(s"cast(cast(o_totalprice as $dec) * 100 as bigint)"))
           .as("r"), count(lit(1)).as("n"))
-        .localCheckpoint()
+        .cut()
       val tot = g.agg(sum(col("r")).as("tr"), sum(col("n")).as("tn"),
         count(lit(1)).as("gg"))
       def d(c: String): Column = col(c).cast("double")
@@ -4015,7 +4016,7 @@ private[graft] object QueriesStats {
       // order. h = one band width, a shared literal.
       val d0 = tbl(s, dir, "documents").select(col("source"), col("n_chars"))
       val two = d0.select(col("source")).distinct()
-        .orderBy(col("source")).limit(2).localCheckpoint()
+        .orderBy(col("source")).limit(2).cut()
       val mx = d0.agg(max(col("n_chars")).as("mx"))
       def dd(c: String): Column = col(c).cast("double")
       val banded = d0.join(broadcast(two), Seq("source"))
@@ -4024,7 +4025,7 @@ private[graft] object QueriesStats {
           least(floor(col("n_chars") * lit(64) / (col("mx") + lit(1))),
             lit(63L)).cast("long").as("b"))
         .groupBy(col("source"), col("b")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val pair = banded.as("a").join(banded.as("b"), lit(true))
         .select(col("a.source").as("sa"), col("b.source").as("sb"),
           col("a.b").as("ba"), col("b.b").as("bb"),
@@ -4062,7 +4063,7 @@ private[graft] object QueriesStats {
           .as("x"))
         .withColumn("w", pmod(datediff(col("day"),
           to_date(lit("1970-01-01"))), lit(7)))
-        .localCheckpoint()
+        .cut()
       val sPer = daily.as("a").join(daily.as("b"),
           col("a.w") === col("b.w") && col("a.day") < col("b.day"))
         .groupBy(col("a.w").as("w"))
@@ -4102,7 +4103,7 @@ private[graft] object QueriesStats {
           sum(when(year(col("l_shipdate")) === 1996,
             expr(s"cast(cast(l_extendedprice as $dec) * 100 as bigint)"))
           .otherwise(0L)).as("r96"))
-        .localCheckpoint()
+        .cut()
       val p = b.as("a").join(b.as("b"), col("a.brand") < col("b.brand"))
         .agg(count(lit(1)).as("n0"),
           sum(when((col("a.r95") < col("b.r95") && col("a.r96") < col("b.r96"))
@@ -4218,12 +4219,12 @@ private[graft] object QueriesStats {
         .join(tbl(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .select(col("c_mktsegment").as("g"),
           expr(s"cast(cast(o_totalprice as $dec) * 100 as bigint)").as("v"))
-        .localCheckpoint()
+        .cut()
       val grid = x.groupBy(col("v")).agg(count(lit(1)).as("t"))
       val cum = operators.ScalableWindow.bandedCumSum(
         grid, "v", descending = false, Seq.empty, "t", "cumt")
         .withColumn("mr2", (col("cumt") - col("t")) * 2 + col("t") + 1)
-        .localCheckpoint()
+        .cut()
       val segv = x.groupBy(col("g"), col("v")).agg(count(lit(1)).as("cg"))
       val rj = segv.join(cum.select(col("v"), col("mr2")), Seq("v"))
         .groupBy(col("g"))
@@ -4298,7 +4299,7 @@ private[graft] object QueriesStats {
       val grid = x.groupBy(col("v"))
         .agg(sum(col("g1").cast("long")).as("c1"),
           sum((!col("g1")).cast("long")).as("c2"))
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.bandedCumSums(
         grid, "v", descending = false, Seq.empty,
         Seq("c1" -> "cum1", "c2" -> "cum2"))
@@ -4398,7 +4399,7 @@ private[graft] object QueriesStats {
         .agg(sum(expr(s"cast(cast(o_totalprice as $dec) * 100 as bigint)"))
           .as("c"))
       val idx = operators.ScalableWindow
-        .boundedRankCum(daily, Seq(("day", true)), "t").localCheckpoint()
+        .boundedRankCum(daily, Seq(("day", true)), "t").cut()
       val n = idx.agg(count(lit(1)).as("nn"))
       val med = idx.crossJoin(broadcast(n))
         .filter(expr("t = div(nn + 1, 2) OR t = div(nn, 2) + 1"))
@@ -4409,7 +4410,7 @@ private[graft] object QueriesStats {
         .filter(col("c") * 2 =!= col("med2"))
         .select(col("t"), (col("c") * 2 > col("med2")).as("up"))
       val reIdx = operators.ScalableWindow
-        .boundedRankCum(signed, Seq(("t", true)), "i").localCheckpoint()
+        .boundedRankCum(signed, Seq(("t", true)), "i").cut()
       val switches = reIdx.as("a").join(reIdx.as("b"),
           col("a.i") === col("b.i") - 1)
         .agg(sum((col("a.up") =!= col("b.up")).cast("long")).as("sw"))
@@ -4443,7 +4444,7 @@ private[graft] object QueriesStats {
           .as("sq"),
           sum(expr(s"cast(cast(l_extendedprice as $dec) * 100 as bigint)"))
           .as("sp"), count(lit(1)).as("n"))
-        .localCheckpoint()
+        .cut()
       val d38 = "decimal(38,0)"
       val o = b.select(col("brand").as("ob"), col("sq").as("osq"),
         col("sp").as("osp"), col("n").as("on"))
@@ -4501,7 +4502,7 @@ private[graft] object QueriesStats {
     val dense = grid.join(obs, Seq("digit"), "left")
       .select(col("digit"), col("p_expected"),
         coalesce(col("n_obs"), lit(0L)).as("n_obs"))
-      .localCheckpoint()
+      .cut()
     val tot = dense.agg(sum(col("n_obs")).as("nn"))
     val term = {
       val e = col("nn").cast("double") * col("p_expected")
@@ -4540,7 +4541,7 @@ private[graft] object QueriesStats {
     */
   private def lifetimeGrid(lt0: DataFrame): DataFrame = {
     // Two consumers (the event grid and the total count): one build.
-    val lt = lt0.localCheckpoint()
+    val lt = lt0.cut()
     val grid = lt.groupBy(col("t"))
       .agg(count(lit(1)).as("c"), sum(col("ev")).as("d"))
     val cum = operators.ScalableWindow.bandedCumSum(grid, "t",

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import graft.functions.{Ids, Redaction, Text, Vectors}
 import graft.operators.{Dedup, Relational, Sampling, Similarity}
 import QueryDsl._
@@ -171,7 +172,7 @@ private[graft] object QueriesText {
             .as("g"))
         .select(col("source"), xxhash64(col("g")).as("g"))
         .distinct()
-        .localCheckpoint()
+        .cut()
       val cnt = sh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val shared = sh.as("a").join(sh.as("b"),
           col("a.g") === col("b.g") && col("a.source") < col("b.source"))
@@ -224,7 +225,7 @@ private[graft] object QueriesText {
       // IEEE ops on identical inputs — bit-equal cross-engine.
       val q = tbl(s, dir, "documents").select(col("doc_id"), col("source"),
           Text.qualityScore(col("text"), Text.tokens(col("text"))).as("quality"))
-        .localCheckpoint()
+        .cut()
       val med = q.groupBy(col("source"))
         .agg(percentile(col("quality"), lit(0.5)).as("med"))
       val dev = q.join(broadcast(med), Seq("source"))
@@ -379,7 +380,7 @@ private[graft] object QueriesText {
       val q = tbl(s, dir, "documents").select(col("doc_id"), col("source"),
           col("n_chars").cast("double").as("x"),
           Text.qualityScore(col("text"), Text.tokens(col("text"))).as("y"))
-        .localCheckpoint()
+        .cut()
       def fold(e: Column): Column =
         aggregate(array_sort(collect_list(struct(col("doc_id"), e.as("e")))),
           lit(0.0), (a, r) => a + r.getField("e"))
@@ -433,13 +434,13 @@ private[graft] object QueriesText {
         .select(col("doc_id"), col("pos"),
           split(col("col"), " ").getItem(0).as("prev"),
           split(col("col"), " ").getItem(1).as("cur"))
-        .localCheckpoint()
+        .cut()
       val uni = docs.select(explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("cu"))
-        .localCheckpoint()
+        .cut()
       val totU = uni.agg(sum(col("cu")).as("t"))
       val big = pos.groupBy(col("prev"), col("cur"))
-        .agg(count(lit(1)).as("cb")).localCheckpoint()
+        .agg(count(lit(1)).as("cb")).cut()
       val cs = big.groupBy(col("prev")).agg(sum(col("cb")).as("cstart"))
       val lp = big.join(cs, Seq("prev"))
         .join(uni.select(col("term").as("cur"), col("cu")), Seq("cur"))
@@ -504,7 +505,7 @@ private[graft] object QueriesText {
       // vocabulary would qualify ~all pairs.
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
       val canon = docs.select(col("doc_id"), md5(col("text")).as("h"))
-        .localCheckpoint()
+        .cut()
       val reps = canon.groupBy(col("h")).agg(min(col("doc_id")).as("rep_id"))
       val repDocs = docs.join(reps, docs("doc_id") === reps("rep_id"))
         .select(col("h"), col("text"))
@@ -512,7 +513,7 @@ private[graft] object QueriesText {
           explode(array_distinct(
             graft.plans.TextKernels.wordShinglesNative(col("text"), 3)))
             .as("term"))
-        .localCheckpoint()
+        .cut()
       // r13 restructure (guide §2.3, the jaccardJoin shape, exact): the
       // old intersection step exploded every candidate pair into |A| rows
       // (cand ⋈ per-class tokens on ha) and shuffled the full token
@@ -528,7 +529,7 @@ private[graft] object QueriesText {
         .agg(array_sort(collect_list(struct(col("df"), col("term"))))
           .getField("term").as("terms"))
         .withColumn("sz", size(col("terms")).cast("long"))
-        .localCheckpoint()
+        .cut()
       val prefix = ordered.select(col("h").as("ha"),
           explode(expr(
             "slice(terms, 1, size(terms) - cast(ceil(0.8 * size(terms)) as int) + 1)"))
@@ -606,10 +607,10 @@ private[graft] object QueriesText {
       val perSV = tbl(s, dir, "documents")
         .select(col("source"), col("n_chars").as("x"))
         .groupBy(col("source"), col("x")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val srcTot = perSV.groupBy(col("source")).agg(sum(col("c")).as("ns"))
       val corpus = perSV.groupBy(col("x")).agg(sum(col("c")).as("cc"))
-        .localCheckpoint()
+        .cut()
       val corpTotal = corpus.agg(sum(col("cc")).as("nc"))
       // Corpus-CDF cumsum over the distinct-value grid: banded two-pass
       // (ScalableWindow), not an unpartitioned window — the grid is
@@ -649,7 +650,7 @@ private[graft] object QueriesText {
           lower(col("text")), 3)).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c"))
       val nr = tf.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r"))
-        .localCheckpoint()
+        .cut()
       val tot = tf.agg(sum(col("c")).as("n"),
         sum(when(col("c") === 1, 1L).otherwise(0L)).as("n1"))
       val nxt = nr.select((col("r") - 1).as("r"), col("n_r").as("n_r1"))
@@ -728,7 +729,7 @@ private[graft] object QueriesText {
         .groupBy(col("g"))
         .agg(sort_array(collect_set(col("source"))).as("ss"))
         .select(col("ss"))
-        .localCheckpoint()
+        .cut()
       val sizes = byGram.select(explode(col("ss")).as("source"))
         .groupBy(col("source")).agg(count(lit(1)).as("ng"))
       val pairs = byGram
@@ -760,7 +761,7 @@ private[graft] object QueriesText {
         .groupBy(col("tok")).agg(count(lit(1)).as("c"))
         // Checkpointed: feeds both the banded pass and the t/v totals —
         // one token-explode build (r13).
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.bandedCumSum(tf, "c",
         descending = true, Seq("tok"), "c", "cum")
       val tot = tf.agg(sum(col("c")).as("t"), count(lit(1)).as("v"))
@@ -787,10 +788,10 @@ private[graft] object QueriesText {
       val perSV = tbl(s, dir, "documents")
         .select(col("source"), col("n_chars").as("x"))
         .groupBy(col("source"), col("x")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val srcTot = perSV.groupBy(col("source")).agg(sum(col("c")).as("ns"))
       val corpus = perSV.groupBy(col("x")).agg(sum(col("c")).as("cc"))
-        .localCheckpoint()
+        .cut()
       val corpTotal = corpus.agg(sum(col("cc")).as("nc"))
       val corpCum = operators.ScalableWindow.bandedCumSum(corpus,
         bandOn = "x", descending = false, tieBreakers = Nil,
@@ -859,7 +860,7 @@ private[graft] object QueriesText {
       // the 6-dp grid folded in language order.
       val lc = tbl(s, dir, "documents")
         .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val st = lc.groupBy(col("source")).agg(sum(col("cnt")).as("tot"))
       val p = col("cnt").cast("double") / col("tot").cast("double")
       lc.join(st, Seq("source"))
@@ -1052,7 +1053,7 @@ private[graft] object QueriesText {
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+        .cut()
       val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       tf.join(broadcast(df_), Seq("term")).crossJoin(broadcast(n))
@@ -1178,13 +1179,13 @@ private[graft] object QueriesText {
       // exactly twice and each pinned frame is doc-count-sized
       // (two ints / a few matched terms per doc, not the token stream).
       val dl = toks.select(col("doc_id"), size(col("toks")).as("dl"))
-        .localCheckpoint()
+        .cut()
       val stats = dl.agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n_docs"))
       val tf = toks
         .select(col("doc_id"), explode(col("toks")).as("term"))
         .filter(col("term").isin(qTerms: _*))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+        .cut()
       val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val comp = round(
         log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
@@ -1221,7 +1222,7 @@ private[graft] object QueriesText {
       val pos = tbl(s, dir, "documents")
         .select(col("doc_id"), posexplode(Text.tokens(col("text"))))
         .select(col("doc_id"), col("pos"), col("col").as("term"))
-        .localCheckpoint()
+        .cut()
       val lm = pos.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       val total = lm.agg(sum(col("cnt")).as("total"))
       val lp = lm.crossJoin(broadcast(total)).select(col("term"),
@@ -1252,12 +1253,12 @@ private[graft] object QueriesText {
       val docs = tbl(s, dir, "documents")
       val uni = docs.select(explode(Text.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val biAll = docs.select(
           explode(graft.plans.TextKernels.wordShinglesNative(col("text"), 2))
             .as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("cnt_ab"))
-        .localCheckpoint()
+        .cut()
       val totU = uni.agg(sum(col("cnt")).as("tot_u"))
       val totB = biAll.agg(sum(col("cnt_ab")).as("tot_b"))
       val ua = uni.select(col("tok").as("wa"), col("cnt").as("cnt_a"))
@@ -1467,7 +1468,7 @@ private[graft] object QueriesText {
       val st = tbl(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val corpus = st.groupBy(col("term")).agg(sum(col("cnt")).as("ccnt"))
       val ctot = corpus.agg(sum(col("ccnt")).as("ctot"))
       val stot = st.groupBy(col("source")).agg(sum(col("cnt")).as("stot"))
@@ -1504,7 +1505,7 @@ private[graft] object QueriesText {
       val st = tbl(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val vocab = st.groupBy(col("term")).agg(sum(col("cnt")).as("tc"))
         .orderBy(col("tc").desc, col("term")).limit(10)
         .select(col("term"), lit(1).as("in_vocab"))
@@ -1543,7 +1544,7 @@ private[graft] object QueriesText {
             .as("g"))
         .select(col("doc_id"), xxhash64(col("g")).as("g"))
         .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val df_ = sh.groupBy(col("g")).agg(count(lit(1)).as("df"))
       sh.join(df_, Seq("g"))
         .groupBy(col("doc_id"))
@@ -1643,7 +1644,7 @@ private[graft] object QueriesText {
       val pos = tbl(s, dir, "documents")
         .select(col("doc_id"), col("lang"), posexplode(Text.tokens(col("text"))))
         .select(col("doc_id"), col("lang"), col("pos"), col("col").as("term"))
-        .localCheckpoint()
+        .cut()
       val isT = col("lang") === "en"
       val tgt = pos.filter(isT).groupBy(col("term")).agg(count(lit(1)).as("tcnt"))
       val raw = pos.filter(!isT).groupBy(col("term")).agg(count(lit(1)).as("rcnt"))
@@ -1685,7 +1686,7 @@ private[graft] object QueriesText {
         .groupBy(col("source")).agg(count(lit(1)).as("n_tokens"))
         .select(col("source"), col("n_tokens"),
           round(sqrt(col("n_tokens").cast("double")), 6).as("sw"))
-        .localCheckpoint()
+        .cut()
       val tot = st.agg(
         aggregate(array_sort(collect_list(struct(col("source"), col("sw")))),
           lit(0.0), (a, x) => a + x.getField("sw")).as("tot"))
@@ -1803,7 +1804,7 @@ private[graft] object QueriesText {
       // The plan references the shingle table three times (eval side,
       // train side, df cap). Materialize it ONCE — repartition for
       // explode parallelism (single local file = one task otherwise),
-      // localCheckpoint to pin the result (the Closure.scala pattern).
+      // a cut to pin the result (the Closure.scala pattern).
       // Probe-measured at sf0.1: recompute-per-reference 5.1 s,
       // materialized 2.2 s; at 100 TB recomputing the corpus shingle
       // scan three times is the difference between one pass and three.
@@ -1812,7 +1813,7 @@ private[graft] object QueriesText {
         .select(col("doc_id"),
           explode(array_distinct(
             graft.plans.TextKernels.wordShinglesNative(col("text"), 3))).as("shingle"))
-        .localCheckpoint()
+        .cut()
       val ev = sh.filter(col("doc_id") < 50)
         .select(col("doc_id").as("eval_id"), col("shingle"))
       val tr = sh.filter(col("doc_id") >= 50)
@@ -1871,7 +1872,7 @@ private[graft] object QueriesText {
       val tf = docs
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+        .cut()
       val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val scored = tf.join(df_, Seq("term"))
@@ -1898,7 +1899,7 @@ private[graft] object QueriesText {
       val grid = d.groupBy(col("n_chars")).agg(
         sum(when(col("source") === "src0", 1L).otherwise(0L)).as("c0"),
         sum(when(col("source") === "src1", 1L).otherwise(0L)).as("c1"))
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.boundedRankCum(grid,
         Seq(("n_chars", true)), "t", Seq(("c0", "cum0"), ("c1", "cum1")))
       val tot = grid.agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
@@ -1931,7 +1932,7 @@ private[graft] object QueriesText {
         sum(when(col("source") === "src2", 1L).otherwise(0L)).as("c1"),
         sum(when(col("source") === "src3", 1L).otherwise(0L)).as("c2"))
         .withColumn("c", col("c1") + col("c2"))
-        .localCheckpoint()
+        .cut()
       val cum = operators.ScalableWindow.boundedRankCum(grid,
         Seq(("n_chars", true)), "t", Seq(("c", "cumc")))
       val tot = grid.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
@@ -1988,7 +1989,7 @@ private[graft] object QueriesText {
           col("x.doc_id") === col("y.doc_id") &&
             col("y.pos") === col("x.pos") + 1)
         .groupBy(col("x.tok").as("w1"), col("y.tok").as("w2"))
-        .agg(count(lit(1)).as("o11")).localCheckpoint()
+        .agg(count(lit(1)).as("o11")).cut()
       val c1 = big.groupBy(col("w1")).agg(sum(col("o11")).as("c1"))
       val c2 = big.groupBy(col("w2")).agg(sum(col("o11")).as("c2"))
       val nTot = big.agg(sum(col("o11")).as("nn"))
@@ -2049,7 +2050,7 @@ private[graft] object QueriesText {
         .filter(length(col("w")) > 0)
       val counts = toks.groupBy(col("source"), col("w"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val totals = counts.groupBy(col("source")).agg(sum(col("c")).as("t"))
       val top = counts.groupBy(col("w")).agg(sum(col("c")).as("tc"))
         .orderBy(col("tc").desc, col("w")).limit(15).select(col("w"))
@@ -2058,7 +2059,7 @@ private[graft] object QueriesText {
         .select(col("source"), col("w"),
           (coalesce(col("c"), lit(0L)).cast("double") / col("t").cast("double"))
             .as("f"))
-        .localCheckpoint()
+        .cut()
       def fold(src: Column, v: Column): Column =
         aggregate(array_sort(collect_list(struct(src, v.as("v")))), lit(0.0),
           (acc, e) => round(acc + e.getField("v"), 10))
@@ -2175,7 +2176,7 @@ private[graft] object QueriesText {
             lower(col("text")), 2)).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("f"))
         .groupBy(col("f")).agg(count(lit(1)).as("nr"))
-        .localCheckpoint()
+        .cut()
       def d(c: Column): Column = c.cast("double")
       fof.as("a").join(fof.as("b"), col("a.f") + 1 === col("b.f"))
         .filter(col("a.f") <= 5)
@@ -2200,7 +2201,7 @@ private[graft] object QueriesText {
         .select(split(col("g"), " ").getItem(0).as("v"),
           split(col("g"), " ").getItem(1).as("w"))
         .groupBy(col("v"), col("w")).agg(count(lit(1)).as("cb"))
-        .localCheckpoint()
+        .cut()
       val cv = big.groupBy(col("v"))
         .agg(sum(col("cb")).as("cvv"), count(lit(1)).as("n1v"))
       val contW = big.groupBy(col("w")).agg(count(lit(1)).as("n1w"))
@@ -2273,11 +2274,11 @@ private[graft] object QueriesText {
           graft.functions.Text.langIdByStopwords(toks, QueryDsl.langMarkers).as("a"),
           graft.plans.TextKernels.langIdNative(col("text"), QueryDsl.ngramProfiles)
             .as("b"))
-        .localCheckpoint()
+        .cut()
       val coin = labs.select(col("a").as("c"), col("b").as("k"))
         .union(labs.select(col("b").as("c"), col("a").as("k")))
         .groupBy(col("c"), col("k")).agg(count(lit(1)).as("o"))
-        .localCheckpoint()
+        .cut()
       val nc = coin.groupBy(col("c")).agg(sum(col("o")).as("n_c"))
       val tot = coin.agg(sum(col("o")).as("bign"),
         sum(when(col("c") =!= col("k"), col("o")).otherwise(0L)).as("o_off"))
@@ -2305,7 +2306,7 @@ private[graft] object QueriesText {
         .select(shiftright(graft.plans.TextKernels.simhash16Native(col("text")),
           10).as("c"), col("lang").as("l"))
         .groupBy(col("c"), col("l")).agg(count(lit(1)).as("n_cl"))
-        .localCheckpoint()
+        .cut()
       val nc = cells.groupBy(col("c")).agg(sum(col("n_cl")).as("n_c"))
       val nl = cells.groupBy(col("l")).agg(sum(col("n_cl")).as("n_l"))
       val tot = cells.agg(sum(col("n_cl")).as("n"))
@@ -2339,7 +2340,7 @@ private[graft] object QueriesText {
       val docs = tbl(s, dir, "documents")
       val tf = docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+        .cut()
       val nDocs = docs.agg(count(lit(1)).as("nd"))
       val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= 50)
@@ -2347,7 +2348,7 @@ private[graft] object QueriesText {
         .select(col("doc_id"), col("term"),
           (col("tf").cast("double") *
             log(col("nd").cast("double") / col("df").cast("double"))).as("w"))
-        .localCheckpoint()
+        .cut()
       val norms = w.select(col("doc_id"), col("term"),
           round(col("w") * col("w"), 9).as("w2"))
         .groupBy(col("doc_id"))
@@ -2467,7 +2468,7 @@ private[graft] object QueriesText {
       val tf = tbl(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
         .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val tok = tf.groupBy(col("source")).agg(sum(col("cnt")).as("ntok"))
       val tot = tf.agg(sum(col("cnt")).as("tt"))
       val trm = tf.groupBy(col("term")).agg(sum(col("cnt")).as("ct"))
@@ -2500,7 +2501,7 @@ private[graft] object QueriesText {
         .select(shiftright(graft.plans.TextKernels.simhash16Native(col("text")),
           10).as("c"), col("lang").as("l"))
         .groupBy(col("c"), col("l")).agg(count(lit(1)).as("n_cl"))
-        .localCheckpoint()
+        .cut()
       val nc = cells.groupBy(col("c")).agg(sum(col("n_cl")).as("n_c"))
       val nl = cells.groupBy(col("l")).agg(sum(col("n_cl")).as("n_l"))
       val tot = cells.agg(sum(col("n_cl")).as("n"))
@@ -2543,14 +2544,14 @@ private[graft] object QueriesText {
       val dt = tbl(s, dir, "documents")
         .select(col("source"), col("doc_id"),
           explode(array_distinct(Text.tokens(col("text")))).as("term"))
-        .localCheckpoint()
+        .cut()
       val tf = dt.groupBy(col("source"), col("term")).agg(count(lit(1)).as("df"))
       val w = Window.partitionBy(col("source"))
         .orderBy(col("df").desc, col("term").asc)
       val top = tf.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5)
         .select(col("source"), col("term"), col("rk"), col("df"))
-        .localCheckpoint()
+        .cut()
       val pairs = top.select(col("source"), col("rk").as("ri"),
           col("term").as("wi"))
         .join(top.select(col("source"), col("rk").as("rj"),
@@ -2618,7 +2619,7 @@ private[graft] object QueriesText {
       val langN = tbl(s, dir, "documents").groupBy(col("lang"))
         .agg(count(lit(1)).as("nl"))
       val tl = dt.groupBy(col("term"), col("lang")).agg(count(lit(1)).as("a"))
-        .localCheckpoint()
+        .cut()
       val tdf = tl.groupBy(col("term")).agg(sum(col("a")).as("df"))
       val d38 = "decimal(38,0)"
       val grid = tdf.crossJoin(broadcast(langN))
@@ -2725,7 +2726,7 @@ private[graft] object QueriesText {
         .select(col("source"), col("doc_id"),
           posexplode(graft.functions.Text.tokens(lower(col("text"))))
             .as(Seq("pos", "tok")))
-        .localCheckpoint()
+        .cut()
       import s.implicits._
       val budgets = Seq(50, 100, 200).toDF("budget")
       val pref = toks.join(broadcast(budgets), col("pos") < col("budget"))
@@ -2759,7 +2760,7 @@ private[graft] object QueriesText {
           least(floor(col("n_chars") * lit(64) / (col("mx") + lit(1))),
             lit(63L)).cast("long").as("b"))
         .groupBy(col("source"), col("b")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val corp = banded.groupBy(col("b")).agg(sum(col("c")).as("cc"))
       val nsrc = banded.groupBy(col("source")).agg(sum(col("c")).as("ns"))
       val nall = banded.agg(sum(col("c")).as("na"))
@@ -2790,7 +2791,7 @@ private[graft] object QueriesText {
       val pos = tbl(s, dir, "documents")
         .select(col("doc_id"), posexplode(Text.tokens(col("text"))))
         .select(col("doc_id"), col("pos"), col("col").as("term"))
-        .localCheckpoint()
+        .cut()
       val uni = pos.groupBy(col("term")).agg(count(lit(1)).as("cu"))
       val bi = pos.as("a").join(pos.as("b"),
           col("a.doc_id") === col("b.doc_id")
@@ -2869,7 +2870,7 @@ private[graft] object QueriesText {
         .groupBy(col("g"))
         .agg(sort_array(collect_set(col("blk"))).as("blks"))
         .select(col("blks"))
-        .localCheckpoint()
+        .cut()
       val per = byg.select(explode(col("blks")).as("blk"))
         .groupBy(col("blk")).agg(count(lit(1)).as("n_shingles"))
       val novel = byg.select(element_at(col("blks"), 1).as("blk"))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import graft.functions.{Ids, Redaction, Text, Vectors}
 import graft.operators.{Dedup, Relational, Sampling, Similarity}
 import QueryDsl._
@@ -325,12 +326,12 @@ private[graft] object QueriesVector {
       val docs = tbl(s, dir, "documents")
       val toks = docs.select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       val dl = toks.select(col("doc_id"), size(col("toks")).as("dl"))
-        .localCheckpoint()
+        .cut()
       val stats = dl.agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n_docs"))
       val tf = toks.select(col("doc_id"), explode(col("toks")).as("term"))
         .filter(col("term").isin(qTerms: _*))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
+        .cut()
       val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val comp = round(
         log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
@@ -386,7 +387,7 @@ private[graft] object QueriesVector {
         .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("w"))
         .filter(col("w") >= 20)
         .select(col("sa"), col("sb"))
-        .localCheckpoint()
+        .cut()
       val und = e.union(e.select(col("sb").as("sa"), col("sa").as("sb")))
       val deg = und.groupBy(col("sa").as("node")).agg(count(lit(1)).as("deg"))
       val compz = deg.filter(col("deg") >= 2)
@@ -520,10 +521,10 @@ private[graft] object QueriesVector {
       val canon = docs.select(col("doc_id"), md5(col("text")).as("h"))
       val groups = canon.groupBy(col("h"))
         .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val repDocs = docs.join(groups, docs("doc_id") === groups("rep_id"))
         .select(col("rep_id").as("doc_id"), col("text"), col("cnt"))
-        .localCheckpoint()
+        .cut()
       val shingled = repDocs.select(col("doc_id"),
           graft.plans.TextKernels.wordShinglesNative(col("text"), 3).as("sh"))
         .filter(size(col("sh")) > 0)
@@ -539,14 +540,14 @@ private[graft] object QueriesVector {
         .join(mult.select(col("doc_id").as("id_b"), col("cnt").as("cb")), Seq("id_b"))
         .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
           (col("ca") * col("cb")).as("w"))
-        .localCheckpoint()
+        .cut()
       val cand = Dedup.minhashCandidatePairs(
           repDocs.select(col("doc_id"), col("text")), "doc_id", "text",
           k = 8, bands = 2, shingleN = 3)
         .join(mult.select(col("doc_id").as("id_a"), col("cnt").as("ca")), Seq("id_a"))
         .join(mult.select(col("doc_id").as("id_b"), col("cnt").as("cb")), Seq("id_b"))
         .select(col("id_a"), col("id_b"), (col("ca") * col("cb")).as("w"))
-        .localCheckpoint()
+        .cut()
       val th = Seq((3, 10), (1, 2), (7, 10)).toDF("tn", "td")
       val truthCounts = th.crossJoin(truth)
         .filter(col("inter") * col("td") >= col("uni") * col("tn"))
@@ -659,7 +660,7 @@ private[graft] object QueriesVector {
       val pairs = Similarity.nearDuplicatePairs(e, "vec_id", "embedding",
           nPlanes = 4, dim = dim, threshold = 0.3)
         .select(col("id_a"), col("id_b"))
-        .localCheckpoint() // referenced three times (q78 rule)
+        .cut() // referenced three times (q78 rule)
       val wedges = pairs
         .join(pairs.select(col("id_a").as("id_b"), col("id_b").as("id_c")), "id_b")
       wedges
@@ -737,7 +738,7 @@ private[graft] object QueriesVector {
           graft.multimodal.Multimodal.MediaRow(id, bos.toByteArray, "image/png", 8, 8)
         }
       val h = graft.multimodal.ImageCodec.aHashes(media)
-        .filter(col("decoded")).toDF().localCheckpoint() // 48 rows, feeds both bands
+        .filter(col("decoded")).toDF().cut() // 48 rows, feeds both bands
       def band(onCol: String) = h.as("a").join(h.as("b"),
           col(s"a.$onCol") === col(s"b.$onCol") &&
             col("a.media_id") < col("b.media_id"))
@@ -792,7 +793,7 @@ private[graft] object QueriesVector {
       val fp = graft.multimodal.AudioCodec.audioFingerprints(media)
         .filter(col("decoded")).toDF()
         .select(col("media_id"), col("fp"), col("fp_hi"), col("fp_lo"))
-        .localCheckpoint() // 48 rows, feeds both band joins
+        .cut() // 48 rows, feeds both band joins
       def band(onCol: String) = fp.as("a").join(fp.as("b"),
           col(s"a.$onCol") === col(s"b.$onCol") &&
             col("a.media_id") < col("b.media_id"))
@@ -819,7 +820,7 @@ private[graft] object QueriesVector {
       // (total degree of brand-c nodes) are exact integer sums; the two
       // divisions per brand and the brand-ordered fold are the only
       // float steps.
-      val edges = copurchaseEdges(s, dir).localCheckpoint()
+      val edges = copurchaseEdges(s, dir).cut()
       val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
       val lab = edges
         .join(p.select(col("p_partkey").as("pa"), col("p_brand").as("ba")), Seq("pa"))
@@ -851,7 +852,7 @@ private[graft] object QueriesVector {
       // moments in DECIMAL(38,0) (degree products summed over edges
       // outgrow BIGINT at corpus scale), each direction of every edge
       // counted once — the standard undirected convention.
-      val edges = copurchaseEdges(s, dir).localCheckpoint()
+      val edges = copurchaseEdges(s, dir).cut()
       val deg = edges.select(col("pa").as("node"))
         .union(edges.select(col("pb").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -881,11 +882,11 @@ private[graft] object QueriesVector {
       // club. All integer counts; one division per threshold; the
       // degenerate N_k ≤ 1 row is NULL by mirrored guard.
       import s.implicits._
-      val edges = copurchaseEdges(s, dir).localCheckpoint()
+      val edges = copurchaseEdges(s, dir).cut()
       val deg = edges.select(col("pa").as("node"))
         .union(edges.select(col("pb").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+        .cut()
       val ks = Seq(4L, 8L, 16L, 32L).toDF("k")
       val lab = edges
         .join(deg.select(col("node").as("pa"), col("deg").as("ja")), Seq("pa"))
@@ -917,7 +918,7 @@ private[graft] object QueriesVector {
       // all edge-sized; see [[graph.KCore]].
       val li = tbl(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .localCheckpoint()
+        .cut()
       // Capped wedge join with the rows-derived width cap (r11): √N
       // bounds any basket's pair output by the corpus row budget;
       // TPC-H baskets ≤ 7 ≪ √N, so output is bit-identical to uncapped.
@@ -941,7 +942,7 @@ private[graft] object QueriesVector {
       // total order makes the top-3 deterministic across engines.
       val li = tbl(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
-        .distinct().localCheckpoint()
+        .distinct().cut()
       val ci = li.groupBy(col("item")).agg(count(lit(1)).as("c"))
       val co = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.item") =!= col("y.item"))
@@ -981,7 +982,7 @@ private[graft] object QueriesVector {
           lit(0.0), (acc, x) => acc + x) / sqrt(lit(8.0))).as(s"p$k")
       }
       val proj = emb.select((col("vec_id") +: col("v") +: projCols): _*)
-        .localCheckpoint()
+        .cut()
       val a = proj.toDF(proj.columns.map("a_" + _): _*)
       val b = proj.toDF(proj.columns.map("b_" + _): _*)
       val do2 = aggregate(zip_with(col("a_v"), col("b_v"),
@@ -1036,7 +1037,7 @@ private[graft] object QueriesVector {
       val e = Relational.keyedPairs(li, "l_orderkey", "l_partkey")
         .groupBy(col("l_partkey_a").as("sa"), col("l_partkey_b").as("sb"))
         .agg(count(lit(1)).as("sh")).filter(col("sh") >= 2)
-        .select(col("sa"), col("sb")).localCheckpoint()
+        .select(col("sa"), col("sb")).cut()
       val dir2 = e.union(e.select(col("sb").as("sa"), col("sa").as("sb")))
       val deg = dir2.groupBy(col("sa").as("node")).agg(count(lit(1)).as("d"))
       val samp = dir2
@@ -1068,10 +1069,10 @@ private[graft] object QueriesVector {
       val e = Relational.keyedPairs(li, "l_orderkey", "l_partkey")
         .groupBy(col("l_partkey_a").as("sa"), col("l_partkey_b").as("sb"))
         .agg(count(lit(1)).as("sh")).filter(col("sh") >= 2)
-        .select(col("sa"), col("sb")).localCheckpoint()
+        .select(col("sa"), col("sb")).cut()
       val deg = e.select(col("sa").as("node"))
         .union(e.select(col("sb").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d")).localCheckpoint()
+        .groupBy(col("node")).agg(count(lit(1)).as("d")).cut()
       val ks = s.range(0, 3).select(
         element_at(typedLit(Seq(2L, 4L, 8L)), col("id").cast("int") + 1).as("k"))
       val nk = ks.crossJoin(deg).filter(col("d") > col("k"))
@@ -1104,14 +1105,14 @@ private[graft] object QueriesVector {
       val e = Relational.keyedPairs(li, "l_orderkey", "l_partkey")
         .groupBy(col("l_partkey_a").as("sa"), col("l_partkey_b").as("sb"))
         .agg(count(lit(1)).as("sh")).filter(col("sh") >= 2)
-        .select(col("sa"), col("sb")).localCheckpoint()
+        .select(col("sa"), col("sb")).cut()
       val com = tbl(s, dir, "part")
         .select(col("p_partkey").as("node"), col("p_brand").as("community"))
       val withC = e
         .join(broadcast(com.select(col("node").as("sa"), col("community").as("ca"))),
           Seq("sa"))
         .join(broadcast(com.select(col("node").as("sb"), col("community").as("cb"))),
-          Seq("sb")).localCheckpoint()
+          Seq("sb")).cut()
       val mTot = withC.agg(count(lit(1)).as("m"))
       val eIn = withC.filter(col("ca") === col("cb"))
         .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
@@ -1139,7 +1140,7 @@ private[graft] object QueriesVector {
       val e = Relational.keyedPairs(li, "l_orderkey", "l_partkey")
         .groupBy(col("l_partkey_a").as("sa"), col("l_partkey_b").as("sb"))
         .agg(count(lit(1)).as("sh")).filter(col("sh") >= 2)
-        .select(col("sa"), col("sb"), lit(1.0).as("w")).localCheckpoint()
+        .select(col("sa"), col("sb"), lit(1.0).as("w")).cut()
       val und = e.union(e.select(col("sb").as("sa"), col("sa").as("sb"),
         col("w")))
       // r12: ONE multi-source BFS keyed on (probe, node) instead of three
@@ -1227,7 +1228,7 @@ private[graft] object QueriesVector {
       val scored = g.select(col("threshold"), col("nl").as("n_left"),
         col("nr").as("n_right"),
         round(side("nl", "pl") + side("nr", "pr"), 6).as("gini"))
-        .localCheckpoint()
+        .cut()
       val best = scored.agg(min(col("gini")).as("gmin"))
       scored.crossJoin(broadcast(best))
         .select(col("threshold"), col("n_left"), col("n_right"), col("gini"),
@@ -1246,7 +1247,7 @@ private[graft] object QueriesVector {
       // distributed Lloyd shape; all driver-side state is k vectors.
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val seeds = e.select(col("vec_id"), col("v"),
           graft.plans.TextKernels.unitHashNative(concat(lit("km_"),
             col("vec_id").cast("string"))).as("h"))
@@ -1276,7 +1277,7 @@ private[graft] object QueriesVector {
           .groupBy(col("cid"))
           .agg(transform(array_sort(collect_list(struct(col("dim"),
             col("c")))), r => r.getField("c")).as("cv"))
-          .localCheckpoint()
+          .cut()
       val c3 = (1 to 3).foldLeft(c0)((c, _) => newCent(assign(c)))
       val fin = assign(c3)
       fin.groupBy(col("cid"))
@@ -1299,7 +1300,7 @@ private[graft] object QueriesVector {
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val cent = e
         .select(col("vec_id"), col("label"),
           posexplode(col("v")).as(Seq("dim", "x")))
@@ -1373,7 +1374,7 @@ private[graft] object QueriesVector {
             .as("cs"))
         .orderBy(col("cs").desc, col("vec_id")).limit(10)
         .select(col("vec_id"))
-      val full = topk(64).localCheckpoint()
+      val full = topk(64).cut()
       Seq(64, 32, 16, 8).map { d =>
         topk(d).join(full, Seq("vec_id"), "left_semi")
           .agg(count(lit(1)).as("n_overlap"))
@@ -1423,7 +1424,7 @@ private[graft] object QueriesVector {
       val signTop = e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"), ham.as("ham"))
         .orderBy(col("ham").asc, col("vec_id")).limit(10)
-        .localCheckpoint()
+        .cut()
       val exact = e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
           round(Vectors.cosineToConst(col("embedding"), q), 4).as("cs"))
@@ -1448,7 +1449,7 @@ private[graft] object QueriesVector {
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val ed = e.select(col("vec_id"), col("label"),
         posexplode(col("v")).as(Seq("dim", "x")))
       def centroid(keys: Seq[Column]) = ed.groupBy(keys :+ col("dim"): _*)
@@ -1502,7 +1503,7 @@ private[graft] object QueriesVector {
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val cent = e.select(col("vec_id"), col("label"),
           posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("label"), col("dim"))
@@ -1512,7 +1513,7 @@ private[graft] object QueriesVector {
         .groupBy(col("label"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
           r => r.getField("c")).as("cv"))
-        .localCheckpoint()
+        .cut()
       def sq(a: Column, b: Column) =
         aggregate(zip_with(a, b, (p, q) => (p - q) * (p - q)), lit(0.0),
           (acc, x) => acc + x)
@@ -1556,18 +1557,18 @@ private[graft] object QueriesVector {
           round(Vectors.cosineToConst(col("embedding"), q), 4).as("rel"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
         .orderBy(col("rel").desc, col("vec_id")).limit(50)
-        .localCheckpoint()
+        .cut()
       val sim = cand.select(col("vec_id").as("vi"), col("v").as("va"))
         .join(cand.select(col("vec_id").as("vj"), col("v").as("vb")),
           col("vi") =!= col("vj"))
         .select(col("vi"), col("vj"),
           round(Vectors.cosine(col("va"), col("vb")), 4).as("sim"))
-        .localCheckpoint()
+        .cut()
       val rels = cand.select(col("vec_id"), col("rel"))
       val p1 = rels.orderBy(col("rel").desc, col("vec_id")).limit(1)
         .select(lit(1L).as("rank"), col("vec_id"), col("rel"),
           col("rel").as("score"))
-        .localCheckpoint()
+        .cut()
       def step(sel: DataFrame, t: Int): DataFrame = {
         val selIds = sel.select(col("vec_id").as("vj"))
         val pick = rels.join(sel.select(col("vec_id")), Seq("vec_id"),
@@ -1581,7 +1582,7 @@ private[graft] object QueriesVector {
           .orderBy(col("score").desc, col("vec_id")).limit(1)
           .select(lit(t.toLong).as("rank"), col("vec_id"), col("rel"),
             col("score"))
-        sel.unionAll(pick).localCheckpoint()
+        sel.unionAll(pick).cut()
       }
       val sel5 = (2 to 5).foldLeft(p1)((acc, t) => step(acc, t))
       sel5.select(col("rank"), col("vec_id"), col("rel"),
@@ -1600,7 +1601,7 @@ private[graft] object QueriesVector {
         .select(col("vec_id"), col("label"),
           pmod(col("vec_id"), lit(2)).as("half"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val cent = e.select(col("vec_id"), col("label"), col("half"),
           posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("label"), col("half"), col("dim"))
@@ -1636,7 +1637,7 @@ private[graft] object QueriesVector {
       // integer math (r12 probe re-plan: the old per-pair
       // array_sort(collect_list) fold materialized a list per candidate
       // pair — millions of lists at sf10); top-20 by (aa desc, a, b).
-      val e0 = copurchaseEdges(s, dir).localCheckpoint()
+      val e0 = copurchaseEdges(s, dir).cut()
       val und = e0.select(col("pa").as("u"), col("pb").as("v"))
         .union(e0.select(col("pb").as("u"), col("pa").as("v")))
       val deg = und.groupBy(col("u")).agg(count(lit(1)).as("dg"))
@@ -1676,11 +1677,11 @@ private[graft] object QueriesVector {
       // graph densifies — then redistributed to all three corners.
       // Every count is an exact integer, lcc one division. Top-20 by
       // (lcc desc, node) among deg ≥ 2 nodes.
-      val e0 = copurchaseEdges(s, dir).localCheckpoint()
+      val e0 = copurchaseEdges(s, dir).cut()
       val und = e0.select(col("pa").as("u"), col("pb").as("v"))
         .union(e0.select(col("pb").as("u"), col("pa").as("v")))
       val deg = und.groupBy(col("u")).agg(count(lit(1)).as("dg"))
-        .localCheckpoint()
+        .cut()
       val lowFirst = col("da") < col("db") ||
         (col("da") === col("db") && col("pa") < col("pb"))
       val ed = e0
@@ -1718,7 +1719,7 @@ private[graft] object QueriesVector {
       // fold in probe order.
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val dim = e.select(size(col("v"))).head().getInt(0)
       val rng = e.select((0 until dim).map(i =>
         min(element_at(col("v"), i + 1)).as(s"mn$i")) ++
@@ -1765,7 +1766,7 @@ private[graft] object QueriesVector {
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           Vectors.toDoubleVec(col("embedding")).as("v"))
-        .localCheckpoint()
+        .cut()
       val nsq = e.select(col("label"), col("vec_id"),
         aggregate(col("v"), lit(0.0), (a, x) => a + x * x).as("n2"))
       val en2 = nsq.groupBy(col("label"))
@@ -1797,7 +1798,7 @@ private[graft] object QueriesVector {
   private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = tbl(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .localCheckpoint()
+      .cut()
     // Rows-derived width cap (r11, the scaledEps precedent): √N bounds
     // any single basket's pair output by the corpus row budget. TPC-H
     // baskets are ≤ 7 ≪ √N at every sf, so the edge list is

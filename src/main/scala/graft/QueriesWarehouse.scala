@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 import graft.functions.{Ids, Redaction, Text, Vectors}
 import graft.operators.{Dedup, Relational, Sampling, Similarity}
 import QueryDsl._
@@ -196,7 +197,7 @@ private[graft] object QueriesWarehouse {
       val g = c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_mktsegment").as("segment"), col("n_name").as("nation"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .cut()
       val safe = g.filter(col("n") >= 5)
         .select(col("segment"), col("nation"), col("n"),
           lit(false).as("suppressed"))
@@ -223,7 +224,7 @@ private[graft] object QueriesWarehouse {
         .filter(col("nxt").isNotNull)
         .groupBy(col("event_type").as("cur"), col("nxt"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val marg = pairs.groupBy(col("cur")).agg(sum(col("cnt")).as("tot"))
       pairs.join(broadcast(marg), Seq("cur"))
         .select(col("cur"), col("nxt"), col("cnt"),
@@ -274,7 +275,7 @@ private[graft] object QueriesWarehouse {
       val items = li.join(p, li("l_partkey") === p("p_partkey"))
         .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
         .distinct()
-        .localCheckpoint()
+        .cut()
       val totals = items.agg(countDistinct(col("ok")).as("n_baskets"))
       val l2 = items.as("x").join(items.as("y"),
           col("x.ok") === col("y.ok") && col("x.brand") < col("y.brand"))
@@ -283,7 +284,7 @@ private[graft] object QueriesWarehouse {
         .crossJoin(broadcast(totals))
         .filter(col("pc") * 200 >= col("n_baskets"))
         .select(col("pa"), col("pb"))
-        .localCheckpoint()
+        .cut()
       // Candidate join L2⋈L2 on the first item, then the Apriori prune:
       // (b, c) must also be in L2.
       val cand = l2.as("m").join(l2.as("n"),
@@ -375,7 +376,7 @@ private[graft] object QueriesWarehouse {
             .when(col("o_orderkey") % 10 >= 6, lit("U"))
             .otherwise(lit("I")).as("op"),
           col("o_totalprice").cast(dec).cast("double").as("val"))
-        .localCheckpoint()
+        .cut()
       val last = chg.groupBy(col("ckey")).agg(max(col("seq")).as("seq"))
       chg.join(last, Seq("ckey", "seq"))
         .filter(col("op") =!= "D")
@@ -437,7 +438,7 @@ private[graft] object QueriesWarehouse {
             .select(expr("div(unix_micros(ts), 86400000000)").as("day"))
             .groupBy(col("day")).agg(count(lit(1)).as("x")),
           Seq(("day", true)), "t")
-        .localCheckpoint()
+        .cut()
       val a = daily.select(col("t").as("ti"), col("x").as("xi"))
       val b = daily.select(col("day"), col("t").as("tt"), col("x"))
       val comp = b.join(a, col("ti") <= col("tt"))
@@ -463,7 +464,7 @@ private[graft] object QueriesWarehouse {
         .select(expr("(div(unix_micros(ts), 86400000000) + 4) % 7").as("dow"),
           expr("div(unix_micros(ts) % 86400000000, 3600000000)").as("hour"))
         .groupBy(col("dow"), col("hour")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val tot = slots.agg(sum(col("cnt")).as("total"))
       slots.crossJoin(broadcast(tot))
         .select(col("dow"), col("hour"), col("cnt"),
@@ -482,7 +483,7 @@ private[graft] object QueriesWarehouse {
             .select(expr("div(unix_micros(ts), 86400000000)").as("day"))
             .groupBy(col("day")).agg(count(lit(1)).as("x")),
           Seq(("day", true)), "t", Seq(("x", "cum")))
-        .localCheckpoint()
+        .cut()
       val stats = daily.agg(count(lit(1)).as("nd"), sum(col("x")).as("tot"))
       val cvals = daily.crossJoin(broadcast(stats))
         .withColumn("mu", col("tot").cast("double") / col("nd").cast("double"))
@@ -521,7 +522,7 @@ private[graft] object QueriesWarehouse {
         .crossJoin(broadcast(maxd))
         .withColumn("r", datediff(col("dmax"), col("last")).cast("long"))
         .withColumn("md", col("m").cast("double"))
-        .localCheckpoint()
+        .cut()
       val th = cust.agg(
         percentile(col("r"), lit(0.25)).as("r1"),
         percentile(col("r"), lit(0.5)).as("r2"),
@@ -557,7 +558,7 @@ private[graft] object QueriesWarehouse {
       // top-10 is TakeOrderedAndProject.
       val keyCnt = tbl(s, dir, "lineitem")
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .cut()
       val stats = keyCnt.agg(count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"))
       keyCnt.crossJoin(broadcast(stats))
         .select(col("l_partkey"), col("cnt"),
@@ -600,7 +601,7 @@ private[graft] object QueriesWarehouse {
       // month-bounded series, then a self-join on t−12 (exactly lag's
       // semantics, null for the first year in both engines).
       val ranked = operators.ScalableWindow.boundedRankCum(
-        m, Seq(("month", true)), "t").localCheckpoint()
+        m, Seq(("month", true)), "t").cut()
       val prev = ranked.select((col("t") + 12).as("t"), col("rev").as("prev"))
       ranked.join(broadcast(prev), Seq("t"), "left")
         .select(col("month"), col("rev").cast("double").as("revenue"),
@@ -618,7 +619,7 @@ private[graft] object QueriesWarehouse {
         .select(col("o_custkey"), col("o_totalprice").cast(dec).as("tp"))
         .groupBy(col("o_custkey"))
         .agg((sum(col("tp")) * 100).cast("long").as("rev_c"))
-        .localCheckpoint()
+        .cut()
       val w = Window.orderBy(col("rev_c").desc, col("o_custkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val ranked = cust.withColumn("cum_c", sum(col("rev_c")).over(w))
@@ -711,7 +712,7 @@ private[graft] object QueriesWarehouse {
         .select(col("o_custkey"), col("o_totalprice").cast(dec).as("tp"))
         .groupBy(col("o_custkey"))
         .agg((sum(col("tp")) * 100).cast("long").as("rev_c"))
-        .localCheckpoint()
+        .cut()
       val ranked = operators.ScalableWindow.bandedCumSum(cust,
         bandOn = "rev_c", descending = true, tieBreakers = Seq("o_custkey"),
         sumCol = "rev_c", out = "cum_c")
@@ -1208,7 +1209,7 @@ private[graft] object QueriesWarehouse {
           col("cust"))
         .distinct()
       val counts = active.groupBy(col("cohort_m"), col("offset_m"))
-        .agg(count(lit(1)).as("n_active")).localCheckpoint()
+        .agg(count(lit(1)).as("n_active")).cut()
       val sizes = counts.filter(col("offset_m") === 0)
         .select(col("cohort_m"), col("n_active").as("cohort_size"))
       counts.join(broadcast(sizes), Seq("cohort_m"))
@@ -1231,7 +1232,7 @@ private[graft] object QueriesWarehouse {
       val p = tbl(s, dir, "part").select(col("p_partkey"), col("p_brand"))
       val items = li.join(p, li("l_partkey") === p("p_partkey"))
         .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
-        .distinct().localCheckpoint()
+        .distinct().cut()
       val totals = items.agg(countDistinct(col("ok")).as("n_baskets"))
       val c1 = items.groupBy(col("brand")).agg(count(lit(1)).as("c"))
       val pairs = items.as("x").join(items.as("y"),
@@ -1361,7 +1362,7 @@ private[graft] object QueriesWarehouse {
           .cast("string"), 1, 1)
       val obs = tbl(s, dir, "orders").select(digit.as("digit"))
         .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-        .localCheckpoint()
+        .cut()
       val tot = obs.agg(sum(col("n_obs")).as("n"))
       val expP = log10(lit(1.0) + lit(1.0) / col("digit").cast("double"))
       val expN = col("n").cast("double") * expP
@@ -1416,7 +1417,7 @@ private[graft] object QueriesWarehouse {
       val cells = tbl(s, dir, "orders")
         .select(col("o_orderpriority").as("prio"), col("o_orderstatus").as("status"))
         .groupBy(col("prio"), col("status")).agg(count(lit(1)).as("n_obs"))
-        .localCheckpoint()
+        .cut()
       val rowm = cells.groupBy(col("prio")).agg(sum(col("n_obs")).as("rt"))
       val colm = cells.groupBy(col("status")).agg(sum(col("n_obs")).as("ct"))
       val tot = cells.agg(sum(col("n_obs")).as("n"))
@@ -1565,7 +1566,7 @@ private[graft] object QueriesWarehouse {
           .as("cents"))
         // Checkpointed (r13): feeds both the percentile-bounds pass and
         // the filtered sum — one scan + cents cast, not two.
-        .localCheckpoint()
+        .cut()
       val bounds = li.groupBy(col("l_returnflag")).agg(
         percentile(col("cents"), lit(0.1)).as("lo"),
         percentile(col("cents"), lit(0.9)).as("hi"))
@@ -1595,7 +1596,7 @@ private[graft] object QueriesWarehouse {
       val base = tbl(s, dir, "orders").groupBy(col("o_custkey")).agg(
         count(lit(1)).as("x"),
         sum(expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)"))
-          .as("y")).localCheckpoint()
+          .as("y")).cut()
       def ranks(c: String): DataFrame = {
         val grid = base.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
         operators.ScalableWindow
@@ -1643,7 +1644,7 @@ private[graft] object QueriesWarehouse {
           when(col("tp").isNotNull, expr("div(tp - t0, 86400000000)"))
             .otherwise(expr("div(tl - t0, 86400000000)")).as("day"),
           col("tp").isNotNull.as("is_event"))
-        .localCheckpoint()
+        .cut()
       val nTot = times.agg(count(lit(1)).as("ntot"))
       val grid = times.groupBy(col("day")).agg(
         sum(when(col("is_event"), 1L).otherwise(0L)).as("d"),
@@ -1655,7 +1656,7 @@ private[graft] object QueriesWarehouse {
           col("ntot") - (col("cumd") - col("d")) - (col("cumc") - col("c")))
         .withColumn("f",
           lit(1.0) - col("d").cast("double") / col("n_risk").cast("double"))
-        .localCheckpoint()
+        .cut()
       val eventDays = cum.filter(col("d") > 0)
         .select(col("t"), col("day"), col("n_risk"), col("d"), col("f"))
       eventDays.as("b").join(eventDays.as("a"), col("a.t") <= col("b.t"))
@@ -1791,7 +1792,7 @@ private[graft] object QueriesWarehouse {
       val base = o.join(first, Seq("cust"))
         .select(col("cohort_m"), (col("m") - col("cohort_m")).as("offset_m"),
           col("cust"), col("cents"))
-        .localCheckpoint()
+        .cut()
       val sizes = base.filter(col("offset_m") === 0)
         .groupBy(col("cohort_m")).agg(countDistinct(col("cust")).as("sz"))
       val grid = base.groupBy(col("cohort_m"), col("offset_m"))
@@ -1948,7 +1949,7 @@ private[graft] object QueriesWarehouse {
         .groupBy(col("c_mktsegment").as("segment"), col("n_name").as("nation"))
         .agg(count(lit(1)).as("n"), bandCount(0), bandCount(1), bandCount(2),
           bandCount(3))
-        .localCheckpoint()
+        .cut()
       val tot = g.agg(sum(col("n")).as("tn"), sum(col("c0")).as("t0"),
         sum(col("c1")).as("t1"), sum(col("c2")).as("t2"))
       def p(c: String, n: String): Column = col(c).cast("double") / col(n).cast("double")
@@ -1976,7 +1977,7 @@ private[graft] object QueriesWarehouse {
       val idx = operators.ScalableWindow
         .boundedRankCum(daily, Seq(("day", true)), "t")
         .select(col("t"), col("x"))
-        .localCheckpoint()
+        .cut()
       val glob = idx.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"))
       val lags = s.range(1, 8).select(col("id").as("lag"))
@@ -2070,7 +2071,7 @@ private[graft] object QueriesWarehouse {
           when(col("tp").isNotNull, expr("div(tp - t0, 86400000000)"))
             .otherwise(expr("div(tl - t0, 86400000000)")).as("day"),
           col("tp").isNotNull.as("is_event"))
-        .localCheckpoint()
+        .cut()
       val nTot = times.agg(count(lit(1)).as("ntot"))
       val grid = times.groupBy(col("day")).agg(
         sum(when(col("is_event"), 1L).otherwise(0L)).as("d"),
@@ -2082,7 +2083,7 @@ private[graft] object QueriesWarehouse {
           col("ntot") - (col("cumd") - col("d")) - (col("cumc") - col("c")))
         .withColumn("h",
           col("d").cast("double") / col("n_risk").cast("double"))
-        .localCheckpoint()
+        .cut()
       val eventDays = cum.filter(col("d") > 0)
         .select(col("t"), col("day"), col("n_risk"), col("d"), col("h"))
       eventDays.as("b").join(eventDays.as("a"), col("a.t") <= col("b.t"))
@@ -2108,7 +2109,7 @@ private[graft] object QueriesWarehouse {
       val g = rev.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .select(col("n_name").as("nation"), col("s_suppkey"), col("cents"))
-        .localCheckpoint()
+        .cut()
       val cd = col("cents").cast("decimal(38,0)")
       val tot = g.groupBy(col("nation")).agg(count(lit(1)).as("n_suppliers"),
         sum(col("cents")).as("tc"), sum(cd * cd).as("sq"))
@@ -2183,7 +2184,7 @@ private[graft] object QueriesWarehouse {
         .dropDuplicates("ok", "brand")
         // Checkpointed (r13): consumed by BOTH sequence sides (brand_a
         // and brand_b joins) — one lineitem⋈part dedup build, not two.
-        .localCheckpoint()
+        .cut()
       seq
         .join(ob.select(col("ok").as("o_orderkey"), col("brand").as("brand_a")),
           Seq("o_orderkey"))
@@ -2230,7 +2231,7 @@ private[graft] object QueriesWarehouse {
         .groupBy(col("p_brand").as("brand"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("pos"))
-        .localCheckpoint()
+        .cut()
       val g = j.agg(sum(col("n")).as("gn"), sum(col("pos")).as("gp"))
       def d(c: String): Column = col(c).cast("double")
       j.crossJoin(broadcast(g))
@@ -2256,7 +2257,7 @@ private[graft] object QueriesWarehouse {
         .groupBy(col("p_brand").as("brand"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("pos"))
-        .localCheckpoint()
+        .cut()
       val g = b.agg(sum(col("n")).as("gn"), sum(col("pos")).as("gp"))
       def d(c: String): Column = col(c).cast("double")
       val withZ = b.crossJoin(broadcast(g))
@@ -2276,7 +2277,7 @@ private[graft] object QueriesWarehouse {
         .select(col("brand"), col("n"), col("z"), col("p"))
       val ranked = operators.ScalableWindow
         .boundedRankCum(withP, Seq(("p", true), ("brand", true)), "bh_rank")
-        .localCheckpoint()
+        .cut()
       val mm = ranked.agg(count(lit(1)).as("m"))
       val kmax = ranked.crossJoin(broadcast(mm))
         .agg(coalesce(max(when(col("p") <= lit(0.10)
@@ -2304,14 +2305,14 @@ private[graft] object QueriesWarehouse {
         .filter(col("nxt").isNotNull)
         .groupBy(col("event_type").as("src"), col("nxt").as("dst"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .cut()
       val tot = trans.groupBy(col("src")).agg(sum(col("c")).as("tc"))
       val tm = trans.join(tot, Seq("src"))
         .select(col("src"), col("dst"),
           (col("c").cast("double") / col("tc").cast("double")).as("w"))
-        .localCheckpoint()
+        .cut()
       val states = tm.select(col("src").as("state")).distinct()
-        .localCheckpoint()
+        .cut()
       var p = states.withColumn("p",
         when(col("state") === "purchase", lit(1.0)).otherwise(lit(0.0)))
       for (_ <- 1 to 5) {
@@ -2324,7 +2325,7 @@ private[graft] object QueriesWarehouse {
           .select(col("state"),
             when(col("state") === "purchase", lit(1.0))
               .otherwise(coalesce(col("reach"), lit(0.0))).as("p"))
-          .localCheckpoint()
+          .cut()
       }
       p.select(col("state"), round(col("p"), 8).as("p_reach_5"))
     }),
@@ -2414,7 +2415,7 @@ private[graft] object QueriesWarehouse {
         .join(li, Seq("brand", "m"), "left")
         .select(col("brand"), col("m"), coalesce(col("rev"), lit(0L)).as("rev"),
           coalesce(col("qty"), lit(0L)).as("qty"))
-        .localCheckpoint()
+        .cut()
       def d(c: String): Column = col(c).cast("double")
       val q19 = (c: Column) => c.cast("decimal(19,0)")
       val byBrand = grid.groupBy(col("brand"))
@@ -2595,7 +2596,7 @@ private[graft] object QueriesWarehouse {
         Seq(("c", false), ("o_orderkey", true)), k = 101).drop("g")
       val ranked = operators.ScalableWindow.boundedRankCum(
         top, Seq(("c", false), ("o_orderkey", true)), "rk")
-        .localCheckpoint()
+        .cut()
       val xk = ranked.filter(col("rk") === 101)
         .select(col("c").as("ck"))
       val terms = ranked.filter(col("rk") <= 100).crossJoin(broadcast(xk))
@@ -2628,7 +2629,7 @@ private[graft] object QueriesWarehouse {
       val w = Window.partitionBy(col("nation")).orderBy(col("d"))
       val t = daily.withColumn("t", row_number().over(w).cast("long"))
         .select(col("nation"), col("d"), col("t"), col("c"))
-        .localCheckpoint()
+        .cut()
       val s38 = "decimal(38,0)"
       val mom = t.groupBy(col("nation"))
         .agg(count(lit(1)).as("n"), sum(col("t").cast(s38)).as("st"),
@@ -2888,10 +2889,10 @@ private[graft] object QueriesWarehouse {
           touched("signup") * 4 + touched("view") * 8, lit(0L))
           .cast("int").as("mask"),
           coalesce(max(col("cv")), lit(0L)).as("conv"))
-        .localCheckpoint()
+        .cut()
       val nUsers = users.agg(count(lit(1)).as("nu"))
       val grid = users.groupBy(col("mask")).agg(sum(col("conv")).as("nc"))
-        .localCheckpoint()
+        .cut()
       val subsets = s.range(0, 16).select(col("id").cast("int").as("sset"))
       // LEFT join: a subset covering NO observed mask (e.g. ∅ when every
       // user touched something) still needs its cum = 0 row — the c1
@@ -2899,7 +2900,7 @@ private[graft] object QueriesWarehouse {
       val cum = subsets.join(broadcast(grid),
           col("mask").bitwiseAND(col("sset")) === col("mask"), "left")
         .groupBy(col("sset")).agg(coalesce(sum(col("nc")), lit(0L)).as("cum"))
-        .localCheckpoint()
+        .cut()
       import s.implicits._
       val chan = Seq(("click", 1), ("error", 2), ("signup", 4), ("view", 8))
         .toDF("channel", "bit")
@@ -2975,11 +2976,11 @@ private[graft] object QueriesWarehouse {
         .groupBy(col("ck"))
         .agg(sum(when(col("h1"), col("c")).otherwise(0L)).as("xa"),
           sum(when(!col("h1"), col("c")).otherwise(0L)).as("xb"))
-        .localCheckpoint()
+        .cut()
       def ranked(xc: String, name: String) = {
         val top = per.select(col("ck"), col(xc).as("s"))
           .orderBy(col("s").desc, col("ck")).limit(20)
-          .localCheckpoint()
+          .cut()
         val o = top.select(col("ck").as("o_id"), col("s").as("o_s"))
         top.join(o, col("o_s") > col("s") ||
             (col("o_s") === col("s") && col("o_id") < col("ck")), "left")
@@ -3022,7 +3023,7 @@ private[graft] object QueriesWarehouse {
       val ev = li.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .select(col("o_custkey").as("ck"), col("d"), col("p_brand").as("b"))
-        .localCheckpoint()
+        .cut()
       val e1 = ev.select(col("ck"), col("d").as("d1"), col("b").as("b_from"))
       val e2 = ev.select(col("ck"), col("d").as("d2"), col("b").as("b_to"))
       e1.join(e2, Seq("ck"))
@@ -3047,14 +3048,14 @@ private[graft] object QueriesWarehouse {
       val per = tbl(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(min(m).as("m0"), max(m).as("ml"))
-        .localCheckpoint()
+        .cut()
       val mmax = per.agg(max(col("ml")).as("mm"))
       val grid = per.crossJoin(broadcast(mmax))
         .select((col("ml") - col("m0")).as("t"),
           when(col("ml") <= col("mm") - 3, 1L).otherwise(0L).as("churn"))
         .groupBy(col("t"))
         .agg(count(lit(1)).as("c_t"), sum(col("churn")).as("d_t"))
-        .localCheckpoint()
+        .cut()
       val g2 = grid.select(col("t").as("t2"), col("c_t").as("c2"))
       grid.join(g2, col("t2") >= col("t"))
         .groupBy(col("t"), col("d_t"))
@@ -3079,7 +3080,7 @@ private[graft] object QueriesWarehouse {
         .groupBy(col("ck"))
         .agg(sum(when(col("h1"), col("c")).otherwise(0L)).as("xa"),
           sum(when(!col("h1"), col("c")).otherwise(0L)).as("xb"))
-        .localCheckpoint()
+        .cut()
       def bounds(xc: String) = per.filter(col(xc) > 0)
         .agg(expr(s"percentile(CAST($xc AS DOUBLE), array(0.2,0.4,0.6,0.8))").as(s"q_$xc"))
       def seg(xc: String, q: String) = when(col(xc) === 0, 0)
@@ -3102,7 +3103,7 @@ private[graft] object QueriesWarehouse {
       val m = (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m")
       val cm = tbl(s, dir, "orders")
         .select(col("o_custkey").as("ck"), m).distinct()
-        .localCheckpoint()
+        .cut()
       val monthly = cm.groupBy(col("m")).agg(countDistinct(col("ck")).as("active"))
       val trailing = cm
         .select(col("ck"), explode(sequence(col("m"), col("m") + 2)).as("tm"))
@@ -3241,7 +3242,7 @@ private[graft] object QueriesWarehouse {
       val daily = dailyRevenue(s, dir)
       val w = Window.partitionBy(col("nation")).orderBy(col("d"))
       val idx = daily.withColumn("t", row_number().over(w).cast("long"))
-        .localCheckpoint()
+        .cut()
       val nPer = idx.groupBy(col("nation")).agg(count(lit(1)).as("nd"))
       val seg = idx.join(broadcast(nPer), Seq("nation"))
         .withColumn("sgm", when(col("t") * 2 <= col("nd"), 1).otherwise(2))
@@ -3395,7 +3396,7 @@ private[graft] object QueriesWarehouse {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("yr"))
         .agg(sum(col("q")).as("q"), sum(col("r")).as("r"))
-        .localCheckpoint()
+        .cut()
       val y0 = cells.filter(col("yr") === 1996)
         .select(col("p_brand"), col("q").as("q0"), col("r").as("r0"))
       val y1 = cells.filter(col("yr") === 1997)
@@ -3432,13 +3433,13 @@ private[graft] object QueriesWarehouse {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("n_name").as("nation"), col("p_brand"), col("yr"))
         .agg(sum(col("r")).as("e"))
-        .localCheckpoint()
+        .cut()
       val nb = cell.filter(col("yr") === 1996)
         .select(col("nation"), col("p_brand"), col("e").as("e0"))
         .join(cell.filter(col("yr") === 1997)
           .select(col("nation"), col("p_brand"), col("e").as("e1")),
           Seq("nation", "p_brand"))
-        .localCheckpoint()
+        .cut()
       val br = nb.groupBy(col("p_brand"))
         .agg(sum(col("e0")).as("b0"), sum(col("e1")).as("b1"))
       val tot = nb.agg(sum(col("e0")).as("t0"), sum(col("e1")).as("t1"))
@@ -3486,7 +3487,7 @@ private[graft] object QueriesWarehouse {
       val g = p.groupBy(col("p_brand"))
         .agg(count(lit(1)).as("nj"), sum(col("x").cast(d38)).as("sx"),
           sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"))
-        .localCheckpoint()
+        .cut()
       val wterms = g.select(col("p_brand"),
         ((col("nj").cast(d38) * col("sxx") - col("sx") * col("sx"))
           .cast("double") / col("nj").cast("double")).as("wj"))
@@ -3569,7 +3570,7 @@ private[graft] object QueriesWarehouse {
       val rsums = ranks.groupBy(col("p_brand"))
         .agg(sum(col("rk")).as("rj"), count(lit(1)).as("m"))
         .filter(col("m") === 3)
-        .localCheckpoint()
+        .cut()
       val nBr = rsums.agg(count(lit(1)).as("n"))
       val dev = col("rj") * 2 - lit(3) * (col("n") + 1)
       val t = rsums.crossJoin(broadcast(nBr))
@@ -3636,7 +3637,7 @@ private[graft] object QueriesWarehouse {
       val w = Window.partitionBy(col("yr"))
         .orderBy(col("rev").desc, col("p_brand").asc)
       val ranks = cells.withColumn("rk", row_number().over(w).cast("long"))
-        .localCheckpoint()
+        .cut()
       val nBr = universe.agg(count(lit(1)).cast("long").as("n"))
       val borda = ranks.crossJoin(broadcast(nBr))
         .groupBy(col("p_brand")).agg(sum(col("n") - col("rk")).as("borda"))
@@ -3678,16 +3679,16 @@ private[graft] object QueriesWarehouse {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("n_name").as("nation"), col("p_brand"))
         .agg(sum(col("r")).as("e"))
-        .localCheckpoint()
+        .cut()
       val i = cell.select(col("nation"), col("p_brand").as("bi"), col("e").as("ei"))
       val j = cell.select(col("nation"), col("p_brand").as("bj"), col("e").as("ej"))
       val wins = i.join(j, Seq("nation")).filter(col("bi") =!= col("bj"))
         .groupBy(col("bi"), col("bj"))
         .agg(sum(when(col("ei") > col("ej"), 1L).otherwise(0L)).as("wij"),
           count(lit(1)).as("nij"))
-        .localCheckpoint()
+        .cut()
       val wt = wins.groupBy(col("bi")).agg(sum(col("wij")).as("wtot"))
-        .localCheckpoint()
+        .cut()
       def iter(pd: DataFrame): DataFrame = {
         val pi = pd.select(col("brand").as("bi"), col("p").as("pi"))
         val pj = pd.select(col("brand").as("bj"), col("p").as("pj"))
@@ -3744,7 +3745,7 @@ private[graft] object QueriesWarehouse {
       val m = base.select(col("p_brand"),
         (col("sp").cast("double") / col("n").cast("double")).as("x1"),
         col("sq").cast("double").as("x2"), col("nc").cast("double").as("x3"))
-        .localCheckpoint()
+        .cut()
       def fold(w: Column, nm: String) =
         aggregate(array_sort(collect_list(struct(col("p_brand"), w.as(nm)))),
           lit(0.0), (a, e) => a + e.getField(nm))
@@ -3768,7 +3769,7 @@ private[graft] object QueriesWarehouse {
       val scored = m.crossJoin(broadcast(sums)).crossJoin(broadcast(ent))
         .select(col("p_brand"), v("x1", "ss1", "f1").as("v1"),
           v("x2", "ss2", "f2").as("v2"), v("x3", "ss3", "f3").as("v3"))
-        .localCheckpoint()
+        .cut()
       val ideals = scored.agg(max(col("v1")).as("i1"), min(col("v1")).as("a1"),
         max(col("v2")).as("i2"), min(col("v2")).as("a2"),
         max(col("v3")).as("i3"), min(col("v3")).as("a3"))
@@ -3824,7 +3825,7 @@ private[graft] object QueriesWarehouse {
         .select(col("p_brand"),
           (col("sp").cast("double") / col("n").cast("double")).as("x1"),
           col("sq").cast("double").as("x2"), col("x3"))
-        .localCheckpoint()
+        .cut()
       def fold(w: Column, nm: String) =
         aggregate(array_sort(collect_list(struct(col("p_brand"), w.as(nm)))),
           lit(0.0), (a, e) => a + e.getField(nm))
@@ -3848,7 +3849,7 @@ private[graft] object QueriesWarehouse {
       val scored = m.crossJoin(broadcast(sums)).crossJoin(broadcast(ent))
         .select(col("p_brand"), col("x3"), v("x1", "ss1", "f1").as("v1"),
           v("x2", "ss2", "f2").as("v2"), v("x3", "ss3", "f3").as("v3"))
-        .localCheckpoint()
+        .cut()
       val ideals = scored.agg(max(col("v1")).as("i1"), min(col("v1")).as("a1"),
         max(col("v2")).as("i2"), min(col("v2")).as("a2"),
         max(col("v3")).as("i3"), min(col("v3")).as("a3"))
@@ -4021,7 +4022,7 @@ private[graft] object QueriesWarehouse {
     // Checkpointed (r13): the daily grid (an orders⋈customer⋈nation
     // aggregate) feeds BOTH the per-nation series fold and the per-day
     // row stream — one build, not two.
-    val daily = daily0.localCheckpoint()
+    val daily = daily0.cut()
     val w = Window.partitionBy(col("nation")).orderBy(col("d"))
     // The whole per-nation EWMA SERIES is built ONCE as an array-growing
     // fold over the day-ordered values (se[1] = x₁; se[k] = 0.25·x_k +

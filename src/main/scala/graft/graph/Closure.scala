@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * COUNT is what dominates iterative wall-clock (fixed scheduling
   * overhead per round), so log-depth wins over the semi-naive frontier
   * form (measured 6.6s → ~2s on the 14-deep sf0.1 tree). Lineage is
-  * truncated every round with `localCheckpoint` (an iterative plan
+  * truncated every round with a `Pin` cut (an iterative plan
   * otherwise grows exponentially and re-executes prior rounds).
   */
 object Closure {

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one edge-scan hash join keyed on src, one
   * map-combinable (dst, label) count, one node-sized argmax
   * (`min(struct(-cnt, label))` — no window), one node-sized fallback
-  * join. Label state is node-sized and re-pinned (`localCheckpoint`)
+  * join. Label state is node-sized and re-pinned (`Pin`)
   * every round, the [[Closure]]/[[PageRank]] lineage discipline.
   */
 object LabelPropagation {

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - per-edge weights (1/outdegree) are folded into the edge table once
   *    up front, so the iteration body is join→multiply→sum with no
   *    degree lookup inside the loop;
-  *  - rank state is node-sized and re-pinned (`localCheckpoint`) every
+  *  - rank state is node-sized and re-pinned (`Pin`) every
   *    round — iterative lineage would otherwise re-execute all prior
   *    rounds (same discipline as [[Closure]]);
   *  - only ONE scalar (the node count) ever reaches the driver.

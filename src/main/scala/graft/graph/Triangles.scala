@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 
 /** Distributed triangle counting + local clustering coefficient via the
   * degree-ordered edge orientation (the MapReduce-era "node iterator++"
@@ -57,7 +58,7 @@ object Triangles {
       when(aLow, col("a")).otherwise(col("b")).as("u"),
       when(aLow, col("b")).otherwise(col("a")).as("v"),
       when(aLow, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(false)
+      .cut(eager = false)
     val e1 = o.select(col("u"), col("v").as("v1"), col("dv").as("d1"))
     val e2 = o.select(col("u"), col("v").as("v2"), col("dv").as("d2"))
     val wedges = e1.join(e2, Seq("u"))
@@ -116,7 +117,7 @@ object Triangles {
       when(aLow, col("a")).otherwise(col("b")).as("u"),
       when(aLow, col("b")).otherwise(col("a")).as("v"),
       when(aLow, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(false)
+      .cut(eager = false)
     val e1 = o.select(col("u"), col("v").as("v1"), col("dv").as("d1"))
     val e2 = o.select(col("u"), col("v").as("v2"), col("dv").as("d2"))
     val tris = e1.join(e2, Seq("u"))

@@ -319,7 +319,7 @@ object Dedup {
     // the CALLER's concern — a projection passed in `docs` runs below
     // this plan, so spread the input BEFORE computing token sets (a
     // single local file otherwise pins that computation to one task).
-    // Pinning is persist(), not localCheckpoint(): the cache populates
+    // Pinning is persist(), not a Pin cut: the cache populates
     // lazily inside the job that first scans it (no extra eager job, no
     // RDD round-trip — 10× on q109's demo scale), and the plan under it
     // stays visible to Catalyst. Both pins are UNPERSISTED before

@@ -73,7 +73,7 @@ object ScalableWindow {
     // jobs, so an un-pinned input subtree (typically a corpus scan +
     // explode/groupBy, e.g. q259's md5-scored lineitem) was computed
     // three times per call, and 3^k times under k chained calls (q277).
-    // One localCheckpoint makes every pass a memory scan of the projected
+    // One cut makes every pass a memory scan of the projected
     // input. Inputs that are ALREADY a pinned leaf skip the copy.
     val in = df.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => df

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 
 /** Distributed Pareto-frontier (skyline) selection, two-phase exact:
   * every partition computes its LOCAL frontier with a bounded in-memory
@@ -42,7 +43,7 @@ object Skyline {
   def frontier(points: Dataset[Pt]): DataFrame = {
     import points.sparkSession.implicits._
     val local = points.mapPartitions(localFrontier).toDF("id", "x", "y")
-      .localCheckpoint() // candidate set: frontier-sized, feeds both join legs
+      .cut() // candidate set: frontier-sized, feeds both join legs
     val p = local.select(col("id"), col("x"), col("y"))
     val q = local.select(col("id").as("qid"), col("x").as("qx"), col("y").as("qy"))
     p.join(q,

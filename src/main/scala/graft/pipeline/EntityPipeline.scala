@@ -2,7 +2,9 @@ package graft.pipeline
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Pin
 
 /** Entity-pipeline core: a registry of named entity transforms with
   * declared dependencies and output contracts, plus a topological
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions.col
   * BASELINE.md lists this as its dominant structural overhead).
   *
   * Scale design:
-  *  - entities that fan out to multiple consumers are persisted once
+  *  - entities that fan out to multiple consumers are materialized once
   *    (the reference's `molecular_characterization` feeds 5 jobs and is
   *    recomputed by each);
   *  - optional per-entity parquet checkpointing gives Luigi-style
@@ -86,41 +88,35 @@ final class PipelineRunner(
     sources: Map[String, DataFrame],
     checkpointDir: Option[String] = None) {
 
-  private val persisted = mutable.ArrayBuffer.empty[DataFrame]
+  private val seams = mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Drop every cache this runner created. Call after the run's outputs
-    * have been materialized (written/collected) — persists are only needed
-    * while the lazy plans that reference them still have pending actions.
+  /** Drop every seam this runner cut. Call after the run's outputs have
+    * been materialized (written/collected) — seams are only needed while
+    * the lazy plans that reference them still have pending actions.
     * Without this a long multi-target run accumulates executor storage.
     *
-    * Fan-out seams are localCheckpoint()s (see [[run]]), whose
-    * MEMORY_AND_DISK blocks belong to the checkpointed RDD, not the
-    * CacheManager — `Dataset.unpersist()` would be a silent no-op on them
-    * (r12 advice), so the checkpointed leaf's RDD is unpersisted directly.
-    * After this call a checkpointed entity CANNOT be recomputed (its
-    * lineage was truncated); honor the "outputs materialized first"
-    * contract above.
+    * A seam's blocks belong to its checkpointed RDD, not the CacheManager
+    * (`Dataset.unpersist()` would be a silent no-op), so the leaf's RDD is
+    * unpersisted directly. After this call a released entity CANNOT be
+    * recomputed (its lineage was truncated); honor the "outputs
+    * materialized first" contract above.
     */
   def unpersistAll(): Unit = {
-    persisted.foreach { df =>
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => df.unpersist()
-      }
-    }
-    persisted.clear()
+    seams.foreach(_.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    })
+    seams.clear()
   }
 
-  /** How many entities consume each entity (for persist decisions). */
+  /** How many entities consume each entity (fan-out seams). */
   private def consumerCounts(order: Seq[String]): Map[String, Int] =
     order
       .flatMap(n => registry(n).deps)
       .groupBy(identity).map { case (k, v) => k -> v.size }
 
   /** Materialize `targets` (and all dependencies), returning every
-    * computed entity. Entities with >1 consumer are persisted; entities
-    * with a checkpoint on disk are loaded instead of recomputed
+    * computed entity. Entities with >1 consumer are cut ([[Pin.cut]]);
+    * entities with a checkpoint on disk are loaded instead of recomputed
     * (Luigi-style resume); helper entities are never checkpointed.
     */
   def run(targets: Seq[String]): Map[String, DataFrame] = {
@@ -148,41 +144,13 @@ final class PipelineRunner(
               spark.read.parquet(p)
             case _ =>
               if (fanOut.getOrElse(name, 0) > 1) {
-                // localCheckpoint, not persist (r12; the q295/r10-item-5
-                // lesson applied INSIDE the runner): persist() caches the
-                // data but keeps the full composed lineage, so every one
-                // of the entity's consumers re-pays Catalyst analysis/
-                // optimization of the whole upstream DAG — on the 60-
-                // transform registry that driver cost dominates the
-                // rebuild (q466). The checkpoint truncates each fan-out
-                // seam to a materialized leaf: same rows computed from
-                // the same inputs within this run, consumers plan against
-                // a leaf. (guide §5: localCheckpoint as the cheap
-                // lineage cut; §3.3: materialize to truncate huge plans.)
-                // Cluster gate (r12 advice): localCheckpoint blocks are
-                // executor-local and UNREPLICATED — with lineage truncated,
-                // losing one executor fails every downstream consumer
-                // instead of recomputing (Spark's docs warn against
-                // combining it with dynamic allocation). That trade is
-                // right on local[N] (no executor to lose) and wrong on a
-                // fleet, so non-local masters fall back to persist()
-                // unless `spark.graft.seam.localCheckpoint=true` opts in
-                // (e.g. static allocation + cheap re-runs).
-                val seamCheckpoint = spark.conf
-                  .getOption("spark.graft.seam.localCheckpoint")
-                  .map(_.toBoolean)
-                  .getOrElse(spark.sparkContext.isLocal)
-                // Lazy (r13): the first consumer's action materializes the
-                // seam and persists its blocks for the rest — an EAGER
-                // checkpoint paid one extra driver-barrier job per fan-out
-                // entity during the rebuild (q466) for rows a consumer was
-                // about to compute anyway. Plan truncation (the reason the
-                // seam exists) is identical either way.
-                val p =
-                  if (seamCheckpoint) contracted.localCheckpoint(false)
-                  else contracted.persist(
-                    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                persisted += p
+                // A cut, not persist(): persist keeps the full composed
+                // lineage, so every consumer would re-pay analysis of the
+                // whole upstream DAG (q466); the cut truncates the seam to
+                // a leaf. Lazy: the first consumer's action materializes it
+                // for the rest, with no extra driver-barrier job.
+                val p = Pin.cut(contracted, eager = false)
+                seams += p
                 p
               } else contracted
           }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Pin.CutOps
 
 import graft.operators.{Relational, Skew}
 
@@ -75,7 +76,7 @@ object SkewDrill {
     // ── Channel 1: keyedPairs √N cap on the co-purchase basket table ──
     val items = spark.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .localCheckpoint() // both arms measure the JOIN, not the scan
+      .cut() // both arms measure the JOIN, not the scan
     val n = items.count()
     val cap = Relational.scaledMaxWidth(n)
     val over = Relational.overWidthKeys(items, "l_orderkey", cap)
@@ -90,9 +91,9 @@ object SkewDrill {
 
     // ── Channel 2: salted join/agg on the hot events user key ─────────
     val ev = graft.Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id")).localCheckpoint()
+      .select(col("user_id"), col("event_id")).cut()
     val dim = ev.select(col("user_id")).distinct()
-      .withColumn("seg", pmod(col("user_id"), lit(7L))).localCheckpoint()
+      .withColumn("seg", pmod(col("user_id"), lit(7L))).cut()
     val (plainCnt, plainSec) =
       time(ev.join(dim, Seq("user_id")).count())
     val (saltedCnt, saltedSec) =

@@ -1,110 +1,83 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage pin for iterative operators (guide §5 "localCheckpoint is a
-  * cheaper way to cut lineage", §3.3 "materialising an intermediate
-  * truncates the plan").
+/** The one materialization policy: every lineage cut in graft goes
+  * through this object (guide §5 "localCheckpoint is a cheaper way to cut
+  * lineage", §3.3 "materialising an intermediate truncates the plan").
   *
-  * The graph/dedup tier previously pinned per-round state as
+  * A cut materializes a frame's rows and replaces its plan with a
+  * `LogicalRDD` leaf over them. The forms differ only in the planner
+  * metadata that leaf carries:
   *
-  * {{{ spark.createDataFrame(df.localCheckpoint().rdd, df.schema) }}}
+  * | form           | attribute ids | partitioning / ordering   | stats   |
+  * |----------------|---------------|---------------------------|---------|
+  * | [[cut]]        | the input's   | the input's               | origin  |
+  * | [[pin]]        | fresh         | unknown                   | default |
+  * | [[pinHashed]]  | fresh         | hash + sort on the keys   | default |
+  * | [[pinKeep]]    | fresh         | the input's               | default |
+  * | [[fresh]]      | fresh         | unknown (re-keys a leaf)  | default |
   *
-  * which truncates lineage and hands every round fresh attribute ids (the
-  * self-join requirement), but pays the `.rdd` round trip: the
-  * checkpointed UnsafeRows are DESERIALIZED to external `Row`s and
-  * RE-ENCODED through a RowEncoder on every consuming job, every round.
+  * Fresh ids make a pinned frame safe to self-join every round; default
+  * ("huge") stats keep a small pinned frame from turning broadcast-
+  * eligible and flipping join strategy per iteration.
   *
-  * [[Pin.pin]] keeps the exact plan-shape contract of that idiom — fresh
-  * attribute ids, `UnknownPartitioning`, default size statistics (so the
-  * optimizer makes the SAME join/exchange choices as before) — while the
-  * leaf serves the checkpointed INTERNAL rows directly, with no
-  * conversion. A/B on the r12 graph subset: preserving the materialized
-  * frame's partitioning/stats instead ([[Pin.pinPartitioned]]) removes
-  * per-iteration exchanges, but on the tiny-partition bench it also
-  * blocks AQE from coalescing the counterpart side and flips node-sized
-  * joins to per-iteration broadcasts — q243/q271/q196 regressed 30-40%,
-  * so the neutral form is the default and the partitioned form is opt-in
-  * per measured site.
+  * Storage depends only on the master, which the code observes (no
+  * option controls it). On a local master the blocks are unreplicated
+  * `MEMORY_AND_DISK`: there is no executor to lose. On any other master
+  * they are `MEMORY_AND_DISK_2`, so a cut survives the loss of one
+  * executor; the leaf is still a `LogicalRDD`, so the plan is truncated
+  * either way and losing both replicas fails the consumer (there is no
+  * lineage left to recompute from).
+  *
+  * `eager = false` defers materialization to the first consuming action:
+  * the plan is truncated exactly as in the eager form, but a fixed-round
+  * iteration chains its rounds into one job instead of paying a driver
+  * barrier per round. Use eager only when something must happen after
+  * the rows exist (e.g. releasing caches the plan depends on).
   */
 object Pin {
 
-  /** Eagerly materialize `df` and return a fresh-leaf frame over the
-    * checkpointed internal rows. Plan-equivalent to
-    * `createDataFrame(df.localCheckpoint().rdd, df.schema)` (fresh ids,
-    * unknown partitioning, default stats), value-identical, no external
-    * Row conversion.
-    *
-    * `eager = false` defers materialization to the first consuming
-    * action (plain `RDD.localCheckpoint` semantics): the Catalyst plan
-    * is truncated to a leaf exactly as in the eager form — same fresh
-    * ids, same self-join safety — but a FIXED-round iteration chains all
-    * its rounds into ONE job instead of paying a driver barrier + job
-    * per round (r13; guide §1.2 "remove passes", §2.6 scheduling
-    * overhead). Use eager only when something must happen AFTER the
-    * rows exist (e.g. releasing caches the plan depends on — the
-    * jaccardJoin unpersist contract).
+  /** Cut `ds`'s lineage: the leaf `Dataset.localCheckpoint(eager)` builds,
+    * keeping the input's attribute ids, partitioning and statistics.
+    * This is the only place graft calls `localCheckpoint`.
+    */
+  def cut[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] =
+    if (ds.sparkSession.sparkContext.isLocal) ds.localCheckpoint(eager)
+    else ds.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_2)
+
+  /** `ds.cut()` for method chains; identical to [[Pin.cut]]. */
+  implicit class CutOps[T](private val ds: Dataset[T]) extends AnyVal {
+    def cut(eager: Boolean = true): Dataset[T] = Pin.cut(ds, eager)
+  }
+
+  /** Cut `df` and return a fresh-leaf frame over the materialized
+    * internal rows: fresh ids, unknown partitioning, default stats.
     */
   def pin(df: DataFrame, eager: Boolean = true): DataFrame =
-    fresh(df.localCheckpoint(eager))
+    fresh(cut(df, eager))
 
-  /** As [[pin]], but the leaf keeps the materialized plan's output
-    * partitioning/ordering and origin statistics — downstream operators
-    * keyed the same way skip their Exchange. Use only where measured
-    * better: it also pins the partition COUNT (AQE cannot coalesce the
-    * other side below it) and makes the frame broadcast-eligible.
-    */
-  def pinPartitioned(df: DataFrame): DataFrame =
-    df.localCheckpoint().queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        ClassicDataset.ofRows(
-          df.sparkSession.asInstanceOf[ClassicSparkSession], l.newInstance())
-      case other =>
-        throw new IllegalArgumentException(
-          s"Pin.pinPartitioned: localCheckpoint() did not yield a LogicalRDD " +
-            s"leaf (got ${other.nodeName})")
-    }
-
-  /** Materialize `df` hash-partitioned by `cols` and keep THAT
-    * partitioning on the leaf while stats stay NEUTRAL (default = huge,
-    * so the frame is never broadcast-eligible and joins cannot flip
-    * strategy): every downstream join/aggregate keyed on `cols` with a
-    * matching partition count skips its Exchange (guide §2.4 "two
-    * operations keyed the same way can share one exchange").
-    *
-    * This is the r13 answer to the r12 pinPartitioned A/B regression:
-    * that form kept ORIGIN stats, which made small pinned frames
-    * broadcast-eligible and re-broadcast per iteration (q243/q271
-    * −30-40%). Here the partition layout is explicit (a repartition on
-    * the join key) and the stats stay the same neutral default as
-    * [[pin]], so the ONLY planner-visible change is the partitioning.
-    * The partition count is pinned to `spark.sql.shuffle.partitions` at
-    * materialization time — scale-adaptive via conf, like every other
-    * exchange.
+  /** Cut `df` hash-partitioned by `cols` and sorted within partitions on
+    * them, keeping that layout on the leaf with neutral stats: every
+    * downstream join/aggregate keyed on `cols` with a matching partition
+    * count skips its Exchange and its Sort on this side (guide §2.4
+    * "two operations keyed the same way can share one exchange"). The
+    * partition count is `spark.sql.shuffle.partitions` at cut time.
     */
   def pinHashed(df: DataFrame, cols: Seq[String],
       eager: Boolean = true): DataFrame =
-    // Sorted within partitions on the key as well: the leaf then carries
-    // BOTH the hash partitioning and the ordering a sort-merge join
-    // needs, so an iterating consumer skips its per-round Exchange AND
-    // its per-round Sort on this side (one sort at materialization).
-    keepPartitioningNeutralStats(
-      df.repartition(cols.map(df.col): _*)
-        .sortWithinPartitions(cols.map(df.col): _*), eager)
+    pinKeep(df.repartition(cols.map(df.col): _*)
+      .sortWithinPartitions(cols.map(df.col): _*), eager)
 
   /** As [[pin]], but the leaf keeps the partitioning/ordering the frame
-    * was MATERIALIZED with (no extra repartition) while stats stay
-    * neutral — use for per-iteration state whose producing plan already
-    * ends keyed the way the next iteration consumes it.
+    * was materialized with — for per-iteration state whose producing plan
+    * already ends keyed the way the next iteration consumes it.
     */
   def pinKeep(df: DataFrame, eager: Boolean = true): DataFrame =
-    keepPartitioningNeutralStats(df, eager)
-
-  private def keepPartitioningNeutralStats(
-      df: DataFrame, eager: Boolean = true): DataFrame =
-    df.localCheckpoint(eager).queryExecution.analyzed match {
+    cut(df, eager).queryExecution.analyzed match {
       case l: LogicalRDD =>
         val session = df.sparkSession.asInstanceOf[ClassicSparkSession]
         // newInstance() re-keys output attrs AND rewrites the captured
@@ -116,14 +89,12 @@ object Pin {
             ni.outputOrdering, ni.isStreaming, ni.stream)(session))
       case other =>
         throw new IllegalArgumentException(
-          s"Pin: localCheckpoint() did not yield a LogicalRDD leaf " +
-            s"(got ${other.nodeName})")
+          s"Pin: cut did not yield a LogicalRDD leaf (got ${other.nodeName})")
     }
 
-  /** Re-key an already-pinned frame's leaf with fresh attribute ids and
-    * NEUTRAL planner metadata (unknown partitioning, default stats) —
-    * zero data movement; safe per use site when one pinned frame feeds
-    * several branches of a self-joining plan.
+  /** Re-key an already-cut frame's leaf with fresh attribute ids and
+    * neutral planner metadata — zero data movement; safe per use site
+    * when one pinned frame feeds several branches of a self-joining plan.
     */
   def fresh(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
     case l: LogicalRDD =>
@@ -131,10 +102,10 @@ object Pin {
       val out = l.output.map(_.newInstance())
       ClassicDataset.ofRows(session, LogicalRDD(out, l.rdd)(session))
     case other =>
-      // Every legitimate caller passes an already-pinned frame; silently
+      // Every legitimate caller passes an already-cut frame; silently
       // returning `df` here would drop the fresh-attribute-id guarantee
       // the iterative self-joins depend on and surface as an
-      // ambiguous-self-join failure far from the cause (r12 advice).
+      // ambiguous-self-join failure far from the cause.
       throw new IllegalArgumentException(
         s"Pin.fresh expects a pinned (LogicalRDD) frame, got ${other.nodeName}")
   }

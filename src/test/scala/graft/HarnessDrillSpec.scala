@@ -321,7 +321,7 @@ class HarnessDrillSpec extends SparkSpec {
     // "flagged: []" were never negatively tested. Each scanner now
     // carries a --selftest that stages a temp tree with a known
     // violation (a file carrying every leak-pattern class; a >60%-
-    // similar near-copy of a real reference file) next to a clean
+    // similar near-copy of a generated reference file) next to a clean
     // control file, and asserts the violation is flagged and the control
     // is not. The drill runs both selftests and requires exit 0.
     import scala.sys.process._

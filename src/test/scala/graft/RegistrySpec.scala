@@ -52,4 +52,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(prefixes.distinct.size == prefixes.size,
       s"duplicate qNN prefixes: ${prefixes.diff(prefixes.distinct).distinct.sorted}")
   }
+
+  test("bench driver line packs a contiguous slowest-first prefix") {
+    // A long-named slow entry that misses the budget ends the packing:
+    // the shorter, faster entries behind it must not take its place.
+    val entries = Seq("\"a\":9.0", "\"" + "x" * 40 + "\":5.0", "\"b\":1.0", "\"c\":0.5")
+    assert(Bench.packPrefix(entries, 20) == "\"a\":9.0")
+    assert(Bench.packPrefix(entries, 1000) == entries.mkString(","))
+    assert(Bench.packPrefix(entries, 7) == "\"a\":9.0")
+    assert(Bench.packPrefix(entries, 6) == "")
+  }
 }

@@ -71,35 +71,42 @@ def scan(repo_root, ref_root):
 
 
 def selftest():
-    """Plant a >60%-similar near-copy of a real reference file in a temp
-    tree (keep 4 of every 5 lines, rename a token) and a genuinely
-    original file; require the detector to flag exactly the copy."""
+    """Plant a >60%-similar near-copy of a reference file in a temp tree
+    (keep 4 of every 5 lines, rename a token) next to a genuinely
+    original file; require the detector to flag exactly the copy. The
+    reference is generated here (100 lines of ETL-shaped Python), so the
+    selftest needs no reference checkout."""
     import tempfile
-    src = None
-    for p in walk(REF, (".py",)):
-        ls = norm_lines(p)
-        if len(ls) >= 80:
-            src = (p, ls)
-            break
-    assert src is not None, "no reference .py with >= 80 lines found"
-    path, lines = src
+    lines = []
+    for i in range(20):
+        lines += [f"def transform_{i}(df, spark):",
+                  f'    """Join table_{i} onto its parent by key_{i}."""',
+                  f"    left = spark.read.parquet('table_{i}')",
+                  f"    out = df.join(left, on='key_{i}', how='left')",
+                  f"    return out.select('id', 'key_{i}', 'value_{i}')"]
     near_copy = [ln.replace("def ", "def copied_") for i, ln in
                  enumerate(lines) if i % 5 != 4]
     original = ["object Original {"] + [
         f"  val metric_{i} = {i} * {i} + {i % 7}" for i in range(120)
     ] + ["}"]
     with tempfile.TemporaryDirectory() as td:
-        with open(os.path.join(td, "planted_copy.py"), "w") as f:
+        ref, repo = os.path.join(td, "reference"), os.path.join(td, "repo")
+        os.makedirs(ref)
+        os.makedirs(repo)
+        with open(os.path.join(ref, "transformer.py"), "w") as f:
+            f.write("\n".join(lines))
+        with open(os.path.join(repo, "planted_copy.py"), "w") as f:
             f.write("\n".join(near_copy))
-        with open(os.path.join(td, "original.scala"), "w") as f:
+        with open(os.path.join(repo, "original.scala"), "w") as f:
             f.write("\n".join(original))
-        n_repo, n_ref, flagged = scan(td, REF)
+        n_repo, n_ref, flagged = scan(repo, ref)
         assert n_repo == 2, f"expected 2 staged files, saw {n_repo}"
+        assert n_ref == 1, f"expected 1 reference file, saw {n_ref}"
         copy_hits = [f for f in flagged if f["repo_file"] == "planted_copy.py"]
         orig_hits = [f for f in flagged if f["repo_file"] == "original.scala"]
         assert copy_hits, (
-            f"planted 80%-line copy of {path} was NOT flagged (threshold "
-            f"{THRESHOLD})")
+            f"planted 80%-line copy of the reference was NOT flagged "
+            f"(threshold {THRESHOLD})")
         assert not orig_hits, f"original file falsely flagged: {orig_hits}"
     best = max(f["similarity"] for f in copy_hits)
     print(f"selftest OK: planted copy flagged at similarity {best} "
