@@ -275,14 +275,10 @@ object PdcmEntities {
         gm.filter(col("match_kind") === kind)
           .select(col("match_symbol"), col("approved_symbol")),
         "symbol", "match_symbol", Seq("approved_symbol"))
-      val (matched, unmatched) = Harmonization.waterfall(
+      val all = Harmonization.waterfall(
         in(rawModule),
         Seq(stage("approved"), stage("previous"), stage("alias")))
-      val all = matched
         .withColumnRenamed("approved_symbol", "harmonized_symbol")
-        .unionByName(unmatched
-          .withColumn("harmonized_symbol", lit(null).cast("string"))
-          .withColumn("match_stage", lit(null).cast("string")))
       val mc = in("molecular_characterization")
         .select(col("id").as("molchar_id"), col("sample_id"),
           col("platform_id"), col(prov))
@@ -1511,7 +1507,9 @@ object PdcmEntities {
     * to a typed empty frame like every other module (S5).
     */
   def sources(spark: SparkSession, root: String): Map[String, DataFrame] =
-    rawSchemas.map { case (name, cols) =>
+    // raw_source is read from the provider YAMLs (ontologySources), not
+    // globbed as a TSV.
+    (rawSchemas - "raw_source").map { case (name, cols) =>
       val paths = name.stripPrefix("raw_") match {
         case "drug_dosing"       => Seq(s"$root/*/drug-dosing.tsv")
         case "patient_treatment" => Seq(s"$root/*/patient-treatment.tsv")
@@ -1554,8 +1552,8 @@ object PdcmEntities {
         ExternalResources.resourcesTable(spark, DefaultResources),
       "raw_downloaded_resources" -> ExternalResources.readDownloaded(
         spark, root, DefaultResources, DefaultDownloadConfs),
-      // Provider source YAMLs via the S6 module reader (overrides the
-      // TSV-shaped empty frame the rawSchemas fold produced).
+      // Provider source YAMLs via the S6 module reader, in the
+      // rawSchemas column layout.
       "raw_source" -> {
         val providerYamls = Option(new java.io.File(root).listFiles())
           .getOrElse(Array.empty[java.io.File])

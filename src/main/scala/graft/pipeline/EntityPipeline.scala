@@ -19,9 +19,11 @@ import org.apache.spark.sql.graft.Pin
   * BASELINE.md lists this as its dominant structural overhead).
   *
   * Scale design:
-  *  - entities that fan out to multiple consumers are materialized once
-  *    (the reference's `molecular_characterization` feeds 5 jobs and is
-  *    recomputed by each);
+  *  - entities that fan out to multiple consumers, and targets, are
+  *    materialized once (the reference's `molecular_characterization`
+  *    feeds 5 jobs and is recomputed by each; a target is written and
+  *    then read again by the API views, as the reference reads its
+  *    loaded tables);
   *  - optional per-entity parquet checkpointing gives Luigi-style
   *    resumability (skip-if-exists) without making it the default cost;
   *  - output contracts (`expected_database_columns` in the reference)
@@ -90,20 +92,22 @@ final class PipelineRunner(
 
   private val seams = mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Drop every seam this runner cut. Call after the run's outputs have
-    * been materialized (written/collected) — seams are only needed while
-    * the lazy plans that reference them still have pending actions.
-    * Without this a long multi-target run accumulates executor storage.
+  /** Drop every seam this runner cut, targets included. Call after the
+    * run's outputs have been materialized (written/collected) — seams are
+    * only needed while the lazy plans that reference them still have
+    * pending actions. Without this a long multi-target run accumulates
+    * executor storage.
     *
     * A seam's blocks belong to its checkpointed RDD, not the CacheManager
     * (`Dataset.unpersist()` would be a silent no-op), so the leaf's RDD is
-    * unpersisted directly. After this call a released entity CANNOT be
-    * recomputed (its lineage was truncated); honor the "outputs
-    * materialized first" contract above.
+    * unpersisted directly, blocking until its blocks are gone. After this
+    * call a released entity CANNOT be recomputed (its lineage was
+    * truncated): an action over it fails naming the entity
+    * ([[Pin.named]]).
     */
   def unpersistAll(): Unit = {
     seams.foreach(_.queryExecution.analyzed match {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD => l.rdd.unpersist(blocking = true)
     })
     seams.clear()
   }
@@ -115,13 +119,17 @@ final class PipelineRunner(
       .groupBy(identity).map { case (k, v) => k -> v.size }
 
   /** Materialize `targets` (and all dependencies), returning every
-    * computed entity. Entities with >1 consumer are cut ([[Pin.cut]]);
-    * entities with a checkpoint on disk are loaded instead of recomputed
-    * (Luigi-style resume); helper entities are never checkpointed.
+    * computed entity. Entities with >1 consumer and the targets are cut
+    * ([[Pin.cut]], lazy): the first action over one materializes its rows
+    * and every later reader — consumers, API views, views over views —
+    * scans them instead of re-running the DAG. Entities with a checkpoint
+    * on disk are loaded instead of recomputed (Luigi-style resume);
+    * helper entities are never checkpointed.
     */
   def run(targets: Seq[String]): Map[String, DataFrame] = {
     val order = registry.topoOrder(targets, sources.keySet)
     val fanOut = consumerCounts(order)
+    val wanted = targets.toSet
     val built = mutable.LinkedHashMap.empty[String, DataFrame]
     order.foreach { name =>
       val d = registry(name)
@@ -143,15 +151,16 @@ final class PipelineRunner(
               contracted.write.mode("overwrite").parquet(p)
               spark.read.parquet(p)
             case _ =>
-              if (fanOut.getOrElse(name, 0) > 1) {
+              if (fanOut.getOrElse(name, 0) > 1 || wanted(name)) {
                 // A cut, not persist(): persist keeps the full composed
                 // lineage, so every consumer would re-pay analysis of the
                 // whole upstream DAG (q466); the cut truncates the seam to
                 // a leaf. Lazy: the first consumer's action materializes it
-                // for the rest, with no extra driver-barrier job.
+                // for the rest, with no extra driver-barrier job; a
+                // single-consumer caller pays only the block copy.
                 val p = Pin.cut(contracted, eager = false)
                 seams += p
-                p
+                Pin.named(p, s"entity '$name'")
               } else contracted
           }
       }

@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{Partition, SparkException, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -91,6 +94,41 @@ object Pin {
         throw new IllegalArgumentException(
           s"Pin: cut did not yield a LogicalRDD leaf (got ${other.nodeName})")
     }
+
+  /** A cut frame whose rows, once gone, fail their reader naming `what`:
+    * released by their owner (`PipelineRunner.unpersistAll`) or lost with
+    * both replicas, a read otherwise fails with Spark's anonymous
+    * missing-block error. The leaf keeps the cut's output, partitioning,
+    * ordering and statistics; only its RDD gains a pass-through layer
+    * over the cut's ([[NamedRows.cut]]).
+    */
+  def named(df: DataFrame, what: String): DataFrame = df.queryExecution.analyzed match {
+    case l: LogicalRDD =>
+      ClassicDataset.ofRows(df.sparkSession.asInstanceOf[ClassicSparkSession],
+        l.makeCopy(Array(l.output, new NamedRows(l.rdd, what), l.outputPartitioning,
+          l.outputOrdering, Boolean.box(l.isStreaming), l.stream)))
+    case other =>
+      throw new IllegalArgumentException(
+        s"Pin.named expects a cut (LogicalRDD) frame, got ${other.nodeName}")
+  }
+
+  /** The rows of a cut, passed through unchanged; a missing cut block
+    * is re-thrown naming `what`.
+    */
+  private[graft] final class NamedRows(rows: RDD[InternalRow], what: String)
+      extends RDD[InternalRow](rows) {
+    /** The cut RDD that holds the blocks. */
+    def cut: RDD[InternalRow] = firstParent[InternalRow]
+    override val partitioner: Option[org.apache.spark.Partitioner] = rows.partitioner
+    override protected def getPartitions: Array[Partition] = cut.partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      try cut.iterator(split, context)
+      catch {
+        case e: SparkException if e.getCondition == "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" =>
+          throw new SparkException(s"$what: its materialized rows are gone (released " +
+            "after use, or lost with their executor) and a cut cannot be recomputed", e)
+      }
+  }
 
   /** Re-key an already-cut frame's leaf with fresh attribute ids and
     * neutral planner metadata — zero data movement; safe per use site

@@ -451,10 +451,14 @@ class OperatorsSpec extends SparkSpec {
     val previous = Seq(("OLD1", "HGNC:1100"), ("AMBIG", "HGNC:2"), ("AMBIG", "HGNC:3"))
       .toDF("prev", "hgnc_id")
     val alias = Seq(("AL1", "HGNC:1100"), ("AMBIG", "HGNC:9")).toDF("al", "hgnc_id")
-    val (matched, unmatched) = Harmonization.waterfall(facts, Seq(
+    val out = Harmonization.waterfall(facts, Seq(
       Stage("approved", approved, "symbol", "sym", Seq("hgnc_id")),
       Stage("previous", previous, "symbol", "prev", Seq("hgnc_id")),
       Stage("alias", alias, "symbol", "al", Seq("hgnc_id"))))
+    // Every fact row comes back once; no stage's claim = null match_stage.
+    assert(out.count() == facts.count())
+    val matched = out.filter($"match_stage".isNotNull)
+    val unmatched = out.filter($"match_stage".isNull)
     val byStage = matched.select("symbol", "match_stage", "hgnc_id")
       .as[(String, String, String)].collect().toSet
     // AMBIG is ambiguous in `previous` (2 candidates) but unique in
@@ -467,11 +471,13 @@ class OperatorsSpec extends SparkSpec {
     assert(unmatched.select("symbol").as[String].collect().toSeq == Seq("NOPE"))
     // Non-broadcast path (fact-sized lookup opt-out): identical results,
     // and the plan must contain no broadcast exchange.
-    val (m2, u2) = Harmonization.waterfall(facts, Seq(
+    val out2 = Harmonization.waterfall(facts, Seq(
       Stage("approved", approved, "symbol", "sym", Seq("hgnc_id")),
       Stage("previous", previous, "symbol", "prev", Seq("hgnc_id")),
       Stage("alias", alias, "symbol", "al", Seq("hgnc_id"))),
       broadcastDim = false)
+    val m2 = out2.filter($"match_stage".isNotNull)
+    val u2 = out2.filter($"match_stage".isNull)
     assert(m2.select("symbol", "match_stage", "hgnc_id")
       .as[(String, String, String)].collect().toSet == byStage)
     assert(u2.select("symbol").as[String].collect().toSeq == Seq("NOPE"))
@@ -482,6 +488,71 @@ class OperatorsSpec extends SparkSpec {
       .toLowerCase.contains("strategy=broadcast"))
     assert(!m2.queryExecution.optimizedPlan.toString
       .toLowerCase.contains("strategy=broadcast"))
+  }
+
+  test("harmonization waterfall equals a stage-by-stage reference on seeded random lookups") {
+    import graft.operators.Harmonization
+    import graft.operators.Harmonization.Stage
+    // The waterfall as the reference states it, one stage at a time: a
+    // fact row goes to the first stage with exactly one candidate for its
+    // key (a null key has none); the claim carries that candidate's payload.
+    type Spec = (String, Int, Seq[(String, String, String)]) // name, fact column, candidates
+    def reference(facts: Seq[(Int, String, String)], stages: Seq[Spec])
+        : Set[(Int, String, String, String)] =
+      facts.map { case (id, a, b) =>
+        stages.iterator.map { case (name, keyCol, cands) =>
+          val key = if (keyCol == 0) a else b
+          (name, cands.filter(c => key != null && c._1 == key))
+        }.collectFirst { case (name, Seq((_, hgnc, note))) => (id, name, hgnc, note) }
+          .getOrElse((id, null, null, null))
+      }.toSet
+    val keys = Seq("K0", "K1", "K2", "K3", "K4", "K5", null)
+    def pick[T](rnd: scala.util.Random, xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val facts = (0 until 40).map(id =>
+        (id, pick(rnd, keys :+ "NONE"), pick(rnd, keys :+ "NONE")))
+      def cands(n: Int): Seq[(String, String, String)] = { // key, hgnc, note
+        val drawn = Seq.fill(n)((pick(rnd, keys), pick(rnd, Seq("H1", "H2", "H3", null)),
+          pick(rnd, Seq("n1", null))))
+        drawn ++ drawn.take(2) // exact duplicate rows: two candidates, not one
+      }
+      // K5 is ambiguous in the first stage and unique in the second.
+      val approved = cands(6) ++ Seq(("K5", "H1", "n1"), ("K5", "H2", null))
+      val previous = cands(6) :+ (("K5", "H9", "n9"))
+      val alias = cands(6)
+      val byB = cands(6) // a stage on the other fact column
+      val stageSpecs = Seq(("approved", 0, approved), ("previous", 0, previous),
+        ("by_b", 1, byB), ("alias", 0, alias))
+      val factDf = facts.toDF("id", "a", "b")
+      val stages = stageSpecs.map { case (name, keyCol, cs) =>
+        // Differently named lookup keys; only the last stage carries `note`.
+        val df = cs.toDF(s"k_$name", "hgnc", "note")
+        Stage(name, if (name == "alias") df else df.drop("note"),
+          if (keyCol == 0) "a" else "b", s"k_$name",
+          if (name == "alias") Seq("hgnc", "note") else Seq("hgnc"))
+      }
+      // Stages without a `note` payload yield a null note.
+      def asClaimed(specs: Seq[Spec]) = specs.map { case (n, k, cs) =>
+        (n, k, if (n == "alias") cs else cs.map(c => (c._1, c._2, null: String)))
+      }
+      val expected = reference(facts, asClaimed(stageSpecs))
+      for (bc <- Seq(true, false)) {
+        val got = Harmonization.waterfall(factDf, stages, broadcastDim = bc)
+        assert(got.columns.toSeq == Seq("id", "a", "b", "hgnc", "note", "match_stage"))
+        val rows = got.select("id", "match_stage", "hgnc", "note")
+          .as[(Int, String, String, String)].collect()
+        assert(rows.length == facts.size, s"seed $seed: a fact row lost or repeated")
+        assert(rows.toSet == expected, s"seed $seed broadcast=$bc")
+      }
+      // One fact key: the whole waterfall is one join.
+      val oneKey = Harmonization.waterfall(factDf, stages.filter(_.factKey == "a"))
+      assert(oneKey.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size == 1)
+      assert(oneKey.select("id", "match_stage", "hgnc", "note")
+        .as[(Int, String, String, String)].collect().toSet ==
+        reference(facts, asClaimed(stageSpecs.filter(_._2 == 0))))
+    }
   }
 
   test("operators are total on empty inputs (SURVEY risk 6)") {

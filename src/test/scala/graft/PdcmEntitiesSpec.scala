@@ -329,6 +329,39 @@ class PdcmEntitiesSpec extends SparkSpec {
     assert(md.filter($"molchar_id".isNotNull).count() == 4) // S1/PL1 exists
   }
 
+  test("release plan shape: one harmonization join, targets cut, views scan the cut") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val registry = PdcmEntities.registry()
+    val src = PdcmEntities.sources(spark, stage())
+    val ents = new PipelineRunner(spark, registry, src).run(Seq("mutation_data", "cna_data"))
+    def leaf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+    // Both targets and the shared gene_marker are cut; a single-consumer
+    // intermediate is not.
+    Seq("mutation_data", "cna_data", "gene_marker").foreach(t =>
+      assert(leaf(ents(t)).nonEmpty, s"$t is not a LogicalRDD leaf"))
+    assert(leaf(ents("patient")).isEmpty, "patient (one consumer) was cut")
+    // mutation_data's own plan over its inputs: the gene_marker lookup
+    // meets the fact side in exactly one join.
+    val d = registry("mutation_data")
+    val gm = leaf(ents("gene_marker")).get
+    def readsLookup(p: LogicalPlan) =
+      p.find { case l: LogicalRDD => l.rdd eq gm; case _ => false }.nonEmpty &&
+        p.find(_.isInstanceOf[Join]).isEmpty
+    val plan = d.transform(spark, d.deps.map(n => n -> ents.getOrElse(n, src(n))).toMap)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join if j.children.exists(readsLookup) => j }.size == 1)
+    // The API view scans the cut: its only join is the restriction anti-join.
+    graft.api.PdcmApi.register(spark, ents)
+    val joins = spark.table("pdcm_api_mutation_data_table").queryExecution.optimizedPlan
+      .collect { case j: Join => j.joinType }
+    assert(joins == Seq(LeftAnti), s"joins below the view: $joins")
+  }
+
   test("ontology branches: roots excluded, ancestors within branch, names squeezed") {
     val diag = out("ontology_term_diagnosis")
     val byId = diag.select("term_id", "term_name", "ancestors")

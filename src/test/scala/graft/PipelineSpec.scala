@@ -71,6 +71,20 @@ class PipelineSpec extends SparkSpec {
     assert(r2.run(Seq("fact"))("fact").count() == 3)
   }
 
+  test("targets and fan-out seams are cut; a released target fails naming the entity") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def isCut(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+    val runner = new PipelineRunner(spark, registry(), Map("raw" -> raw))
+    val out = runner.run(Seq("fact", "helper"))
+    // helper is a target; dim has one consumer and is not.
+    assert(isCut(out("fact")) && isCut(out("helper")) && !isCut(out("dim")))
+    assert(out("fact").collect().length == 3) // the first action materializes the cut
+    runner.unpersistAll()
+    val e = intercept[Exception](out("fact").collect())
+    assert(e.getMessage.contains("entity 'fact'"), e.getMessage)
+  }
+
   test("missing input fails with the entity that needs it") {
     val e = intercept[NoSuchElementException](
       new PipelineRunner(spark, registry(), Map.empty).run(Seq("dim")))

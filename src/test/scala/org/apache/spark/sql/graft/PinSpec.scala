@@ -141,8 +141,12 @@ object PinClusterDrill {
       e => s"FAILED: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}",
       identity)
 
+  /** The RDD holding each cut leaf's blocks (under [[Pin.named]]'s layer). */
   private def leafRdds(df: DataFrame) =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd match {
+      case n: Pin.NamedRows => n.cut
+      case r => r
+    } }
 
   /** Planned replication and blocks actually held (min over partitions). */
   private def storage(k: String, df: DataFrame): Unit = {
