@@ -14,54 +14,54 @@ private[graft] object OraclePdcm {
   // display-rename/score arithmetic inline. The CTE chain is SHARED
   // between q120 (the entity projection) and q295 (the views.sql:816-851
   // computed-column contract over the API view) so the two oracles can
-  // never drift apart.
-  private val siCtes: String =
+  // never drift apart. `{fixture}` stands for the staged fixture dir.
+  private def siCtes(fixture: String): String =
       """WITH RECURSIVE
          raw_patient AS (
            SELECT patient_id, sex, history, ethnicity, ethnicity_assessment_method,
                   age_at_initial_diagnosis, initial_diagnosis,
                   regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/patient.tsv',
+           FROM read_csv('{fixture}/*/patient.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_sample AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/sample.tsv',
+           FROM read_csv('{fixture}/*/sample.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_model AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/model.tsv',
+           FROM read_csv('{fixture}/*/model.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_sharing AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/sharing.tsv',
+           FROM read_csv('{fixture}/*/sharing.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_mcs AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/molchar_sample.tsv',
+           FROM read_csv('{fixture}/*/molchar_sample.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_mcp AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/molchar_platform.tsv',
+           FROM read_csv('{fixture}/*/molchar_platform.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_dd AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/drug-dosing.tsv',
+           FROM read_csv('{fixture}/*/drug-dosing.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_pt AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/patient-treatment.tsv',
+           FROM read_csv('{fixture}/*/patient-treatment.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          raw_ontolia AS (
            SELECT trim(split_part(line, '=', 1)) AS regimen_id,
                   trim(unnest(string_split(split_part(line, '=', 2), ','))) AS comp_id
-           FROM read_csv('/root/repo/target/q120_fixtures/ontolia.txt',
+           FROM read_csv('{fixture}/ontolia.txt',
              delim='\t', quote='', header=false, all_varchar=true, names=['line'])
            WHERE contains(line, '=')),
          src_kv AS (
            SELECT trim(split_part(line, ':', 1)) AS k,
                   trim(substr(line, strpos(line, ':') + 1)) AS v,
                   regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/source.yaml',
+           FROM read_csv('{fixture}/*/source.yaml',
              delim='\t', quote='', header=false, all_varchar=true, filename=true,
              names=['line'])),
          raw_source AS (
@@ -74,7 +74,7 @@ private[graft] object OraclePdcm {
                   lower(trim(m.primary_site)) AS r_site, lower(trim(m.tumour_type)) AS r_tt,
                   m.mapped_term_id
            FROM (SELECT unnest(mappings) AS m
-                 FROM read_json_auto('/root/repo/target/q120_fixtures/diagnosis_mappings.json'))),
+                 FROM read_json_auto('{fixture}/diagnosis_mappings.json'))),
          obo_terms AS (
            SELECT
              trim(regexp_extract(stanza_text, '(?m)^\s*id: *([^\n]*)', 1)) AS term_id,
@@ -83,7 +83,7 @@ private[graft] object OraclePdcm {
                '\s+', ' ', 'g')) AS term_name,
              regexp_extract_all(stanza_text, '(?m)^\s*is_a: *([^\n]*)', 1) AS is_a_refs
            FROM (SELECT unnest(string_split(content, '[Term]')) AS stanza_text
-                 FROM read_text('/root/repo/target/q120_fixtures/ncit.obo'))
+                 FROM read_text('{fixture}/ncit.obo'))
            WHERE regexp_matches(stanza_text, '(?m)^\s*id: ')),
          obo_edges AS (
            SELECT term_id AS child, trim(split_part(ref, '!', 1)) AS parent
@@ -308,7 +308,7 @@ private[graft] object OraclePdcm {
            LEFT JOIN raw_source rs USING (data_source)),
          raw_cell AS (
            SELECT *, regexp_extract(filename, '.*/([^/]+)/[^/]+$', 1) AS data_source
-           FROM read_csv('/root/repo/target/q120_fixtures/*/cell_model.tsv',
+           FROM read_csv('{fixture}/*/cell_model.tsv',
              delim='\t', header=true, all_varchar=true, filename=true)),
          rel AS (
            SELECT DISTINCT model_id, data_source FROM (
@@ -317,6 +317,7 @@ private[graft] object OraclePdcm {
              UNION ALL
              SELECT parent_model_id, data_source FROM raw_model
              WHERE parent_model_id IS NOT NULL AND parent_model_id <> ''))"""
+        .replace("{fixture}", fixture)
 
   /** The dataset_available list with the reference's appended flags
     * (model_metadata_transformer_job.py:237-266), as a DuckDB expression
@@ -500,13 +501,18 @@ private[graft] object OraclePdcm {
          LEFT JOIN rel r ON e.model_id = r.model_id
            AND e.data_source = r.data_source"""
 
-  def map: Map[String, String] = Map(
-    "q120_search_index_e2e" -> (siCtes + "\n         " + q120Select),
+  /** The search_index oracles (q120, q466, q295) over the two-provider
+    * fixture staged at `fixture`.
+    */
+  def searchIndexSql(fixture: String): Map[String, String] = Map(
+    "q120_search_index_e2e" -> (siCtes(fixture) + "\n         " + q120Select),
     // q466 is the FRESH-rebuild face of the same search_index contract
     // (q120 probes the memoized entities; q466 re-runs the DAG) — the
     // oracle is therefore literally q120's.
-    "q466_registry_rebuild" -> (siCtes + "\n         " + q120Select),
-    "q295_search_index_flags" -> (siCtes + "\n         " + q295Select),
+    "q466_registry_rebuild" -> (siCtes(fixture) + "\n         " + q120Select),
+    "q295_search_index_flags" -> (siCtes(fixture) + "\n         " + q295Select))
+
+  def map: Map[String, String] = searchIndexSql(Tables.fixtureDir) ++ Map(
     "q53_nodes" ->
       """SELECT 'customer' AS node_type, c_custkey AS node_id,
          '{"name":"' || c_name || '"}' AS data FROM customer

@@ -103,7 +103,7 @@ private[graft] object QueriesPdcm {
       // (the recurring production cost); this face keeps the rebuild
       // cost measured instead of hidden. Oracle: identical to q120's
       // (same contract, same staged fixture).
-      val work = "/root/repo/target/q120_fixtures"
+      val work = Tables.fixtureDir
       searchIndexProjection(
         runRegistryFresh(s, work, Seq("search_index"))("search_index"))
     }),
@@ -121,7 +121,7 @@ private[graft] object QueriesPdcm {
       // TSV/YAML/JSON/OBO parse, dims, patient/model joins, the 4-key
       // diagnosis-mapping join, the recursive ontology ancestor
       // closure, display renames, scoring — from the SAME staged files.
-      val work = "/root/repo/target/q120_fixtures"
+      val work = Tables.fixtureDir
       searchIndexProjection(
         runRegistry(s, work, Seq("search_index"))("search_index"))
     }),
@@ -136,7 +136,7 @@ private[graft] object QueriesPdcm {
       // Models" (facet 6, has_relations) facets resolve against REAL
       // columns of the search surface. The oracle replays the same
       // CASEs over the shared q120 CTE chain in DuckDB.
-      val work = "/root/repo/target/q120_fixtures"
+      val work = Tables.fixtureDir
       val ents = runRegistry(s, work,
         Seq("search_index", "model_relationships", "knowledge_graph"))
       graft.api.PdcmApi.register(s, ents)

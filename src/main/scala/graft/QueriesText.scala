@@ -2849,31 +2849,23 @@ private[graft] object QueriesText {
       // block's distinct shingles split into first-seen-here vs already
       // seen in an earlier block — the corpus-growth gauge behind
       // dedup-aware data mixing (a block full of repeats adds nothing).
-      // Shingle stream is distinct-collapsed per doc then per block;
-      // first-block is one min; every count is exact.
-      // r13 restructure (guide §2.3/§2.4, exact): previously
-      // distinct(blk, g) THEN groupBy(g) shuffled the gram strings twice;
-      // one gram-keyed pass collects each gram's distinct block set
-      // (collect_set partial-aggregates map-side exactly like the
-      // distinct did) — per-block totals and first-block counts both
-      // read the gram-free block sets (min(blk) = head of the sorted
-      // set). The inline transform is also replaced by the native
-      // one-pass shingle kernel (the lambda re-evaluated split() per
-      // element — O(tokens²) per doc); byte-identical by the kernel
-      // parity contract (FunctionsSpec).
-      val byg = tbl(s, dir, "documents")
+      // Every aggregate is map-combinable with per-key state bounded
+      // by the key: the distinct (g, blk) pairs counted per block give
+      // n_shingles, and each gram's first block (one min per gram)
+      // counted per block gives n_novel. Both branches read the same
+      // distinct pairs, so the planner reuses that one exchange and the
+      // documents are scanned and shingled once. The native one-pass
+      // shingle kernel is byte-identical to the lambda form by the
+      // kernel parity contract (FunctionsSpec).
+      val pairs = tbl(s, dir, "documents")
         .filter(size(Text.tokens(col("text"))) >= 3)
         .select(expr("cast(doc_id as bigint) div 100").as("blk"),
           explode(array_distinct(
             graft.plans.TextKernels.wordShinglesNative(col("text"), 3)))
             .as("g"))
-        .groupBy(col("g"))
-        .agg(sort_array(collect_set(col("blk"))).as("blks"))
-        .select(col("blks"))
-        .cut()
-      val per = byg.select(explode(col("blks")).as("blk"))
-        .groupBy(col("blk")).agg(count(lit(1)).as("n_shingles"))
-      val novel = byg.select(element_at(col("blks"), 1).as("blk"))
+        .distinct()
+      val per = pairs.groupBy(col("blk")).agg(count(lit(1)).as("n_shingles"))
+      val novel = pairs.groupBy(col("g")).agg(min(col("blk")).as("blk"))
         .groupBy(col("blk")).agg(count(lit(1)).as("n_novel"))
       per.join(novel, Seq("blk"), "left")
         .select(col("blk").as("block"), col("n_shingles"),

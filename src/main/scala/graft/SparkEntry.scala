@@ -35,7 +35,7 @@ object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    revenueByNation(spark, "/root/testdata/sf0.001")
+    revenueByNation(spark, Tables.sfDir("0.001"))
 
   /** TPC-H-Q5-style revenue-per-nation: fact-side multi-join with
     * broadcast dims + FK resolution via [[Relational.transformToFk]].

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Test-table access + session defaults shared by Verify/Bench/tests.
+/** Test-table access, the local session and the repo/testdata paths
+  * shared by Verify/Bench/tools/tests: each is decided here and nowhere
+  * else.
   *
   * The synthetic `events` table carries nanosecond parquet timestamps,
   * which Spark's vectorized reader rejects by default; sessions created
@@ -24,6 +26,45 @@ object Tables {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true"
   )
+
+  /** Local cores: `SPARK_GRAFT_CPUS` when set, else the host's. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The local session every graft main and the test suites run on:
+    * `local[cores]` with one shuffle partition per core, no UI,
+    * [[sessionConfigs]], and WARN logging.
+    */
+  def localSession(cores: Int): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      // 4000, not the default 100: Bench runs ~490 queries × several
+      // codegen units each, round after round, and a smaller LRU evicts
+      // a query's generated classes before its next sample runs, which
+      // then re-pays janino compilation (~40-100 ms/query, seconds on
+      // the widest plans): measurement overhead, not query cost.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The generated tables at scale factor `sf` (TESTDATA.md). */
+  def sfDir(sf: String): String = s"/root/testdata/sf$sf"
+
+  /** The checkout's root: sbt sets `user.dir` to the build's base
+    * directory for forked runs and tests.
+    */
+  def repoDir: String = sys.props("user.dir")
+
+  /** Where q120/q295/q466 stage the two-provider PDCM fixture, and
+    * where their oracle SQL reads it.
+    */
+  def fixtureDir: String = s"$repoDir/target/q120_fixtures"
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

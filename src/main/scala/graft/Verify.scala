@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.cores)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated name prefixes); the driver
     // sets no env, so its runs always dump everything.
@@ -54,6 +46,14 @@ object Verify {
     }
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} FAILED: ${failed.sorted.mkString(", ")}")
+    writeOracleSql(outDir, SparkEntry.oracleSql.filter(o => selected(o._1)))
+    spark.stop()
+  }
+
+  /** Write `outDir/oracle_sql.json`, query name → DuckDB SQL, the file
+    * `tools/check.py` replays against the dumped results.
+    */
+  def writeOracleSql(outDir: String, sql: Iterable[(String, String)]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -66,9 +66,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(o => selected(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

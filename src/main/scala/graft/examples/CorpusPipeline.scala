@@ -76,15 +76,10 @@ object CorpusPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(graft.Tables.sfDir("0.001"))
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-corpus").toString + "/corpus")
-    val b = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(graft.Tables.cores)
     run(spark, sfDir, outDir).foreach { case (stage, n) =>
       println(f"[corpus] $stage%-20s $n")
     }

@@ -1,7 +1,6 @@
 package graft.examples
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.Tables
 import graft.pdcm.PdcmEntities
 import graft.pipeline.PipelineRunner
@@ -9,8 +8,8 @@ import graft.sources.PostgresTsv
 
 /** Full PDCM entity DAG driven end-to-end: stages a two-provider fixture
   * (provB deliberately lacks every module except patients, exercising the
-  * empty-input path), runs the whole registry through PipelineRunner, and
-  * writes COPY-ready TSV sinks.
+  * empty-input path), runs the release (`PdcmEntities.releaseTargets`)
+  * through PipelineRunner, and writes COPY-ready TSV sinks.
   *
   * Run: sbt "runMain graft.examples.PdcmFull [workDir]"
   */
@@ -214,27 +213,10 @@ object PdcmFull {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("pdcm-full").toString)
     stageExampleProviders(work)
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(Tables.cores)
 
     val out = new PipelineRunner(spark, PdcmEntities.registry(),
-      PdcmEntities.sources(spark, work))
-      .run(Seq("search_index", "search_facet", "treatment_protocol",
-        "quality_assurance", "molecular_characterization", "mutation_data",
-        "expression_data", "cna_data", "biomarker_data", "nodes", "edges",
-        "ontology_term_diagnosis", "ontology_term_treatment",
-        "ontology_term_regimen", "sample_to_ontology", "regimen_to_treatment",
-        "treatment_harmonised", "treatment_by_model", "treatment",
-        "treatment_component", "model_links",
-        "molecular_data_links", "model_metadata",
-        "available_molecular_data_columns", "immunemarker_data",
-        "provider_group", "contact_people", "publication_group",
-        "xenograft_model_specimen", "platform"))
+      PdcmEntities.sources(spark, work)).run(PdcmEntities.releaseTargets)
     out.foreach { case (name, df) =>
       PostgresTsv.write(df, s"$work/out/$name")
     }

@@ -346,6 +346,21 @@ object PdcmEntities {
       .withColumn("id", Ids.hashId(col("name")))
       .select("id", "name")
 
+  /** The release: search_index plus every entity a heavy `pdcm_api`
+    * view reads, as `PdcmFull` and `PdcmVolume` build and write it.
+    */
+  val releaseTargets: Seq[String] = Seq("search_index", "search_facet",
+    "treatment_protocol", "quality_assurance", "molecular_characterization",
+    "mutation_data", "expression_data", "cna_data", "biomarker_data", "nodes",
+    "edges", "ontology_term_diagnosis", "ontology_term_treatment",
+    "ontology_term_regimen", "sample_to_ontology", "regimen_to_treatment",
+    "treatment_harmonised", "treatment_by_model", "treatment",
+    "treatment_component", "model_links", "molecular_data_links",
+    "model_metadata", "available_molecular_data_columns",
+    "immunemarker_data", "provider_group", "contact_people",
+    "publication_group", "xenograft_model_specimen", "platform",
+    "model_relationships", "knowledge_graph")
+
   /** Build the full entity registry.
     *
     * @param molecularDataRestriction provider → restricted-table pairs

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{SparkEntry, Tables}
 
 /** Dev tool: dump `.explain("formatted")` per query to files — the
@@ -20,13 +18,8 @@ object ExplainDump {
     val out = args(0)
     val suffix = args(1)
     val only = args.lift(2).map(_.split(",").toSet)
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Tables.sfDir("0.001"))
+    val spark = Tables.localSession(Tables.cores)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(out))
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -3,8 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pdcm.PdcmEntities
 import graft.pipeline.PipelineRunner
 
@@ -14,9 +12,9 @@ import graft.pipeline.PipelineRunner
   * (`etl/sources.yaml:238-318`). This main stages a SCALED fixture —
   * the canonical toy providers PLUS `nProv` generated providers, each
   * with 10³–10⁴-row mutation/expression/cna files — runs the full
-  * registry (the PdcmFull target list) through PipelineRunner, and
+  * release (`PdcmEntities.releaseTargets`) through PipelineRunner, and
   * oracle-checks the q120 search_index and q295 view projections at
-  * that scale by path-substituting the committed oracle CTE chain.
+  * that scale by pointing the committed oracle CTE chain at the work dir.
   *
   * Deterministic: every value is index-derived (no RNG), so reruns
   * produce byte-identical fixtures and the oracle compare is a real
@@ -191,35 +189,15 @@ object PdcmVolume {
     val (nPat, nMut, nExp, nCna) = (40, 5000, 2000, 2000)
     stage(work, nProv, nPat, nMut, nExp, nCna)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // the PdcmFull target list — search_index plus every heavy view
-    val targets = Seq("search_index", "search_facet", "treatment_protocol",
-      "quality_assurance", "molecular_characterization", "mutation_data",
-      "expression_data", "cna_data", "biomarker_data", "nodes", "edges",
-      "ontology_term_diagnosis", "ontology_term_treatment",
-      "ontology_term_regimen", "sample_to_ontology", "regimen_to_treatment",
-      "treatment_harmonised", "treatment_by_model", "treatment",
-      "treatment_component", "model_links", "molecular_data_links",
-      "model_metadata", "available_molecular_data_columns",
-      "immunemarker_data", "provider_group", "contact_people",
-      "publication_group", "xenograft_model_specimen", "platform",
-      "model_relationships", "knowledge_graph")
+    val spark = graft.Tables.localSession(graft.Tables.cores)
+    val targets = PdcmEntities.releaseTargets
     val t0 = System.nanoTime()
     val ents = new PipelineRunner(spark, PdcmEntities.registry(),
       PdcmEntities.sources(spark, work)).run(targets)
     val counts = targets.map(t => t -> ents(t).count())
     val buildSec = (System.nanoTime() - t0) / 1e9
 
-    // oracle rows: the committed q120/q295 contracts, path-substituted
+    // oracle rows: the committed q120/q295 contracts over this fixture
     new java.io.File(outDir).mkdirs()
     graft.QueriesPdcm.searchIndexProjection(ents("search_index"))
       .coalesce(1).write.mode("overwrite")
@@ -235,21 +213,8 @@ object PdcmVolume {
          FROM pdcm_api_search_index_vw""")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/q295_search_index_flags")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val sub = (name: String) => SparkEntryOracle(name)
-      .replace("/root/repo/target/q120_fixtures", work)
-    val json = Seq("q120_search_index_e2e", "q295_search_index_flags")
-      .map(n => s"${q(n)}: ${q(sub(n))}").mkString("{", ",", "}")
-    Files.write(Paths.get(s"$outDir/oracle_sql.json"),
-      json.getBytes(StandardCharsets.UTF_8))
+    graft.Verify.writeOracleSql(outDir,
+      graft.OraclePdcm.searchIndexSql(work) - "q466_registry_rebuild")
 
     val countJson = counts.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
@@ -259,7 +224,4 @@ object PdcmVolume {
       s""""counts":$countJson}""")
     spark.stop()
   }
-
-  private def SparkEntryOracle(name: String): String =
-    graft.SparkEntry.oracleSql(name)
 }

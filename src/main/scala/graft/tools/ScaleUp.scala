@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 proof-point run: replicates an
@@ -80,14 +80,7 @@ object ScaleUp {
     val k = kStr.toInt
     val hotMod: Option[Long] =
       args.lift(3).map(f => math.max(2L, math.round(1.0 / f.toDouble)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (c, v) => builder.config(c, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(graft.Tables.cores)
     for (name <- graft.Tables.names) {
       val df = spark.read.parquet(s"$src/$name.parquet")
       scaleTable(df, name, k, hotMod)

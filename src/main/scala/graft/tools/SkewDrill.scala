@@ -63,15 +63,7 @@ object SkewDrill {
   def main(args: Array[String]): Unit = {
     val Array(dir, outJson) = args.take(2)
     val budget = sys.env.getOrElse("GRAFT_SKEW_BUDGET", "120").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-    graft.Tables.sessionConfigs.foreach { case (c, v) => builder.config(c, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(graft.Tables.cores)
 
     // ── Channel 1: keyedPairs √N cap on the co-purchase basket table ──
     val items = spark.read.parquet(s"$dir/lineitem.parquet")

@@ -108,7 +108,7 @@ class HarnessDrillSpec extends SparkSpec {
       Files.writeString(Paths.get(out, "oracle_sql.json"), json)
       val buf = new StringBuilder
       val rc = Process(Seq("python3", "tools/check.py", sfDir, out),
-        new java.io.File("/root/repo"))
+        new java.io.File(Tables.repoDir))
         .!(ProcessLogger(l => buf.append(l).append('\n'), _ => ()))
       (rc, buf.toString)
     }
@@ -150,7 +150,7 @@ class HarnessDrillSpec extends SparkSpec {
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", cp, "graft.Bench")
     val out = new StringBuilder
-    val rc = Process(cmd, new java.io.File("/root/repo"),
+    val rc = Process(cmd, new java.io.File(Tables.repoDir),
       "SPARK_GRAFT_SF_DIR" -> sfDir,
       "SPARK_GRAFT_ONLY" -> "q01,q03",
       "SPARK_GRAFT_ROUNDS" -> "1",
@@ -210,7 +210,7 @@ class HarnessDrillSpec extends SparkSpec {
     def run(args: Seq[String]): (Int, String) = {
       val out = new StringBuilder
       val rc = Process(Seq("python3", "tools/roundlint.py") ++ args,
-        new java.io.File("/root/repo"))
+        new java.io.File(Tables.repoDir))
         .!(ProcessLogger(l => { out.append(l).append('\n'); () },
           l => { out.append(l).append('\n'); () }))
       (rc, out.toString)
@@ -258,7 +258,7 @@ class HarnessDrillSpec extends SparkSpec {
     def runGate(): (Int, String) = {
       val buf = new StringBuilder
       val rc = Process(Seq("python3", "tools/check.py", d.getPath, out),
-        new java.io.File("/root/repo"))
+        new java.io.File(Tables.repoDir))
         .!(ProcessLogger(l => buf.append(l).append('\n'), _ => ()))
       (rc, buf.toString)
     }
@@ -330,7 +330,7 @@ class HarnessDrillSpec extends SparkSpec {
     def run(tool: String): (Int, String) = {
       val out = new StringBuilder
       val rc = Process(Seq("python3", s"tools/$tool", "--selftest"),
-        new java.io.File("/root/repo"))
+        new java.io.File(Tables.repoDir))
         .!(ProcessLogger(l => { out.append(l).append('\n'); () },
           l => { out.append(l).append('\n'); () }))
       (rc, out.toString)

@@ -1,0 +1,47 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One decision point each for the local session and for the machine's
+  * paths: `Tables.scala` is the only source that makes either decision.
+  */
+class LintSpec extends AnyFunSuite {
+
+  // Forked tests run in the build's base directory.
+  private val src = Paths.get(Tables.repoDir, "src")
+  private val tables = src.resolve(Paths.get("main", "scala", "graft", "Tables.scala"))
+
+  /** `file:line: text` for every line of a Scala file under `dir`,
+    * other than `Tables.scala`, that `pattern` matches.
+    */
+  private def hits(dir: Path, pattern: Regex): List[String] = {
+    assert(Files.isRegularFile(tables), s"no Tables.scala under $src")
+    val files = Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 100, s"scanned only ${files.size} Scala files under $dir")
+    for {
+      f <- files if f != tables
+      (line, i) <- Files.readAllLines(f).asScala.toList.zipWithIndex
+      if pattern.findFirstIn(line).nonEmpty
+    } yield s"${src.relativize(f)}:${i + 1}: ${line.trim}"
+  }
+
+  test("lint: only Tables.scala names a path under the machine's root directory") {
+    // Assembled, so that this file does not match itself.
+    val rootPath = Regex.quote("/" + "root/").r
+    val found = hits(src, rootPath)
+    assert(found.isEmpty,
+      s"resolve paths through Tables.sfDir/repoDir/fixtureDir:\n${found.mkString("\n")}")
+  }
+
+  test("lint: only Tables.scala calls SparkSession.builder under src/main") {
+    val found = hits(src.resolve("main"), """SparkSession\s*\.\s*builder""".r)
+    assert(found.isEmpty,
+      s"build local sessions with Tables.localSession:\n${found.mkString("\n")}")
+  }
+}

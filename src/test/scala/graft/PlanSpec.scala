@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet, Min}
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Physical-plan shape assertions for representative queries.
   *
   * The scale story in SparkEntry's scaladoc makes concrete claims — dims
@@ -324,6 +327,22 @@ class PlanSpec extends SparkSpec {
       s"the daily rollup must combine map-side before the shuffle:\n$plan")
     assert(globalWindows("q257_acf") == 0,
       "the day-grid index must come from boundedRankCum, not a global window")
+  }
+
+  test("q496: per-gram state is map-combinable — no collect_set, and no cut hides part of the plan") {
+    // A per-gram collect_set of blocks grows with the corpus; a min per
+    // gram and a distinct (gram, block) pair are bounded by their key.
+    // The whole plan must be visible here: a cut would hide whatever
+    // aggregates run before it.
+    val plan = SparkEntry.queries("q496_novelty_rate")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    assert(plan.collectFirst { case l: LogicalRDD => l }.isEmpty,
+      s"a cut hides part of q496's plan:\n$plan")
+    val aggs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case a: AggregateExpression => a.aggregateFunction }))
+    assert(aggs.exists(_.isInstanceOf[Min]), s"no per-gram min in:\n$plan")
+    assert(!aggs.exists(_.isInstanceOf[CollectSet]),
+      s"q496 collects a per-gram set:\n$plan")
   }
 
   test("SUITE-WIDE: no query plans an unpartitioned window, allowlist = the two declared exact faces") {

@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSession {
   lazy val spark: SparkSession = {
-    val b = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = Tables.localSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -23,5 +16,5 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir = Tables.sfDir("0.001")
 }

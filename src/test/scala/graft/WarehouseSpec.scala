@@ -83,7 +83,7 @@ class WarehouseSpec extends SparkSpec {
     // estimator (k-1)/h_k is genuinely estimating; require every brand
     // within 25% of the exact count (k = 256 gives ~6% standard error;
     // 25% is > 4 sigma) and the unsaturated case to be exact.
-    val dir = "/root/testdata/sf0.01"
+    val dir = Tables.sfDir("0.01")
     val est = SparkEntry.queries("q436_topsis_kmv")(spark, dir)
       .select($"brand", $"est_buyers").as[(String, Double)].collect().toMap
     val li = Tables.load(spark, dir, "lineitem")
