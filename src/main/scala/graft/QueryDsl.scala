@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * SQL builders consume.
   */
 private[graft] object QueryDsl {
-  def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  def tbl(s: SparkSession, dir: String, name: String): DataFrame = Tables.load(s, dir, name)
 
   val dec = "decimal(18,2)"
 

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Test-table access, the local session and the repo/testdata paths
   * shared by Verify/Bench/tools/tests: each is decided here and nowhere
@@ -66,8 +69,55 @@ object Tables {
     */
   def fixtureDir: String = s"$repoDir/target/q120_fixtures"
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A resolved parquet relation and the file statuses it was resolved
+    * from: (path, length, modification time) of each leaf file.
+    */
+  private final case class Resolved(files: Seq[(String, Long, Long)], relation: BaseRelation)
+
+  private val relations = new SessionMemo[String, Resolved]
+
+  /** Test table `name` under `sfDir`: the one reader of the test tables.
+    *
+    * The first read in a session lists the file and infers its schema (a
+    * Spark job); the resolved relation is kept per (session, path) and
+    * reused while the file statuses under the path are unchanged, so a
+    * repeat read is a status check plus analysis of one leaf. Each call
+    * returns a new frame with fresh attribute ids, so two loads of one
+    * table self-join as two independent reads do. A rewrite that keeps a
+    * file's path, length and modification time is not seen.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val files = fileStatuses(spark, path)
+    val relation = relations.get(spark, path).filter(_.files == files).map(_.relation)
+      .getOrElse {
+        val r = spark.read.parquet(path).queryExecution.analyzed match {
+          case l: LogicalRelation => l.relation
+          case other => throw new IllegalStateException(
+            s"$path: expected a file relation, got ${other.nodeName}")
+        }
+        relations.put(spark, path, Resolved(files, r))
+        r
+      }
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  /** (path, length, modification time) of the file at `path`, or of
+    * every file under it when it is a directory, sorted by path.
+    */
+  private def fileStatuses(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(p)
+    val leaves =
+      if (status.isFile) Iterator(status)
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      }
+    leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sortBy(_._1)
+  }
 
   /** `events` with `ts` normalized to TimestampType.
     *

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.SparkSession
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** SQL surface: register the engine's tables and derived API views as
   * temp views, so end users query with plain `spark.sql` — the Spark
@@ -13,19 +13,19 @@ import graft.Tables
   */
 object SqlViews {
 
-  /** Sessions×dirs already registered. Registration re-reads every parquet
-    * footer and re-plans ~10 views (~0.6 s), so queries that call
-    * [[register]] defensively must not pay it twice; keyed by the session
-    * (not globally) because temp views are session-scoped.
+  /** Sessions×dirs already registered. Registration re-plans ~10 views
+    * (the tables themselves come from [[Tables.load]]'s per-session
+    * relations), so queries that call [[register]] defensively must not
+    * pay it twice; keyed by the session (not globally) because temp views
+    * are session-scoped.
     */
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+  private val registered = new SessionMemo[String, Unit]
 
   /** Register every base table as `<name>` plus the derived views.
     * Idempotent per (session, sfDir): repeat calls are no-ops.
     */
   def register(spark: SparkSession, sfDir: String): Unit =
-    if (registered.add((spark, sfDir))) doRegister(spark, sfDir)
+    registered.getOrElseUpdate(spark, sfDir)(doRegister(spark, sfDir))
 
   private def doRegister(spark: SparkSession, sfDir: String): Unit = {
     Tables.names.foreach { n =>

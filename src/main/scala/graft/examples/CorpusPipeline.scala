@@ -30,7 +30,7 @@ import graft.sources.Snapshots
 object CorpusPipeline {
 
   def run(spark: SparkSession, sfDir: String, outDir: String): Seq[(String, Long)] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
 
     // 1. Heuristic quality gate (Gopher-style points; q36's scoring).

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.io.IOException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -12,9 +15,10 @@ import graft.functions.Cleaning
   *
   * Scale notes: schema is declared (never inferred — no sampling pass over
   * 100 TB of TSVs); the provenance column comes from `input_file_name()`
-  * at scan time (no join); unreadable/missing globs degrade to an empty
-  * frame with the declared schema so a 1000-provider run never aborts on
-  * one absent file.
+  * at scan time (no join); a glob that matches no file contributes
+  * nothing, and when none match the result is an empty frame with the
+  * declared schema, so a 1000-provider run never aborts on one absent
+  * file; a path that exists but cannot be read fails the read.
   */
 object Tsv {
 
@@ -30,7 +34,10 @@ object Tsv {
     * column set. Steps (matching reference order, `spark_reader.py:86-108`):
     * read → clean column names → drop '#'-comment rows (in `commentField`)
     * → stamp provenance from the file path via `providerRegex`.
-    * Missing inputs → empty frame with declared schema + provenance "".
+    * Each glob is expanded here and the reader gets the matched files, so
+    * a glob that matches nothing drops out alone; when no glob matches,
+    * the result is the empty frame with declared schema + provenance "".
+    * Any other failure propagates, naming the path it could not read.
     */
   def read(
       spark: SparkSession,
@@ -40,18 +47,14 @@ object Tsv {
       providerRegex: String = ".*/([^/]+)/[^/]+$"
   ): DataFrame = {
     val schema = declaredSchema(columns.map(Cleaning.cleanName))
+    val files = paths.flatMap(matches(spark, _))
     val raw =
-      try {
-        val df = spark.read
-          .option("sep", "\t")
-          .option("header", "true")
-          .schema(schema)
-          .csv(paths: _*)
-        df.queryExecution.logical // force path resolution errors now
-        df
-      } catch {
-        case _: Exception => empty(spark, columns)
-      }
+      if (files.isEmpty) empty(spark, columns)
+      else spark.read
+        .option("sep", "\t")
+        .option("header", "true")
+        .schema(schema)
+        .csv(files: _*)
     val cleaned = Cleaning.cleanColumnNames(raw)
     val filtered = commentField match {
       case Some(f) => Cleaning.filterCommentRows(cleaned, f)
@@ -63,6 +66,17 @@ object Tsv {
         ProvenanceCol,
         regexp_extract(input_file_name(), providerRegex, 1))
   }
+
+  /** The files `glob` matches, sorted; none when nothing matches. */
+  private def matches(spark: SparkSession, glob: String): Seq[String] =
+    try {
+      val p = new Path(glob)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Option(fs.globStatus(p)).toSeq.flatten.map(_.getPath.toString).sorted
+    } catch {
+      case e: IOException =>
+        throw new IOException(s"Tsv.read: cannot read '$glob': ${e.getMessage}", e)
+    }
 
   /** Empty frame with the declared schema + blank provenance
     * (reference `spark_reader.py:95-107`).

@@ -82,7 +82,7 @@ object ScaleUp {
       args.lift(3).map(f => math.max(2L, math.round(1.0 / f.toDouble)))
     val spark = graft.Tables.localSession(graft.Tables.cores)
     for (name <- graft.Tables.names) {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = graft.Tables.load(spark, src, name)
       scaleTable(df, name, k, hotMod)
         .write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet")
       println(s"[scaleup] $name -> ${out}/$name.parquet")

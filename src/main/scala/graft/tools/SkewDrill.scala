@@ -66,7 +66,7 @@ object SkewDrill {
     val spark = graft.Tables.localSession(graft.Tables.cores)
 
     // ── Channel 1: keyedPairs √N cap on the co-purchase basket table ──
-    val items = spark.read.parquet(s"$dir/lineitem.parquet")
+    val items = graft.Tables.load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
       .cut() // both arms measure the JOIN, not the scan
     val n = items.count()

@@ -7,8 +7,9 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One decision point each for the local session and for the machine's
-  * paths: `Tables.scala` is the only source that makes either decision.
+/** One decision point each for the local session, the machine's paths
+  * and the test-table reader: `Tables.scala` is the only source that
+  * makes any of these decisions.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -43,5 +44,13 @@ class LintSpec extends AnyFunSuite {
     val found = hits(src.resolve("main"), """SparkSession\s*\.\s*builder""".r)
     assert(found.isEmpty,
       s"build local sessions with Tables.localSession:\n${found.mkString("\n")}")
+  }
+
+  test("lint: only Tables.scala reads a test table's parquet path under src/main") {
+    // `<dir>/<table>.parquet`, with the table a literal or a plain variable.
+    val tableRead = """read\s*\.\s*parquet\(\s*s"\$\{?\w+\}?/(\$\{?\w+\}?|\w+)\.parquet"""".r
+    val found = hits(src.resolve("main"), tableRead)
+    assert(found.isEmpty,
+      s"read test tables with Tables.load:\n${found.mkString("\n")}")
   }
 }

@@ -29,6 +29,22 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() == 0)
   }
 
+  test("Tsv.read: a glob that matches nothing drops out alone") {
+    val dir = tmpDir()
+    Files.createDirectories(Paths.get(s"$dir/providerA"))
+    Files.writeString(Paths.get(s"$dir/providerA/patient.tsv"), "field\tvalue\np1\tv1\n")
+    val df = Tsv.read(spark, Seq(s"$dir/*/patient.tsv", s"$dir/*/absent.tsv"),
+      Seq("field", "value"))
+    assert(df.select("field", Tsv.ProvenanceCol).as[(String, String)].collect().toSeq ==
+      Seq(("p1", "providerA")))
+  }
+
+  test("Tsv.read: a path that cannot be read fails and names the path") {
+    val path = "nosuchfs://host/providers/*/patient.tsv"
+    val e = intercept[java.io.IOException](Tsv.read(spark, Seq(path), Seq("field", "value")))
+    assert(e.getMessage.contains(path), e.getMessage)
+  }
+
   test("Obo.parse: stanzas, urls, multi is_a") {
     val obo =
       """format-version: 1.2

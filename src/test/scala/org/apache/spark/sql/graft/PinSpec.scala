@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.RDDBlockId
 
 import graft.SparkSpec
-import graft.graph.{Hits, PageRank}
+import graft.graph.{Closure, Hits, KCore, LabelPropagation, PageRank, ShortestPaths}
 import graft.pipeline.{EntityDef, EntityRegistry, PipelineRunner}
 
 /** The materialization policy: [[Pin]] is the only lineage cut, it builds
@@ -84,15 +84,17 @@ class PinSpec extends SparkSpec {
   }
 }
 
-/** Child-JVM half of [[PinSpec]]: runs PageRank, Hits, a 5-deep
+/** Child-JVM half of [[PinSpec]]: runs the iterative graph operators
+  * (PageRank, Hits, LabelPropagation, ShortestPaths, Closure, KCore), a 5-deep
   * `EntityPipeline` chain with a fan-out seam and a self-joining consumer,
   * and an eager cut, on the master given as `args(0)`; prints one
   * `drill\tkey\tvalue` line per observation. On a non-local master it
   * then kills one executor and re-runs every consumer.
   */
 object PinClusterDrill {
-  val results = Seq("pagerank", "hits", "pipeline", "cut")
-  val leaves = Seq("pagerank", "hits", "seam", "cut")
+  private val graphOps = Seq("pagerank", "hits", "labelprop", "paths", "closure", "kcore")
+  val results = graphOps ++ Seq("pipeline", "cut")
+  val leaves = graphOps ++ Seq("seam", "cut")
 
   /** Run the drill in a fresh JVM on `master`; returns key -> value. */
   def launch(master: String): Map[String, String] = {
@@ -170,6 +172,13 @@ object PinClusterDrill {
     val pagerank = PageRank.run(edges, "src", "dst", nodes, "id")
       .select(col("node"), round(col("rank"), 8).as("rank"))
     val hits = Hits.run(edges, "src", "dst", iters = 4)
+    val both = edges.unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val labelprop = LabelPropagation.run(both, "src", "dst", nodes, "id", rounds = 3)
+    val paths = ShortestPaths.boundedHops(edges.withColumn("w", col("src") % 3 + 1),
+      "src", "dst", "w", nodes.filter(col("id") === 6L), "id", rounds = 4)
+    val closure = Closure.transitiveClosure(edges, "src", "dst")
+    val kcore = KCore.peel(edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct(), "a", "b", k = 2, rounds = 3)
 
     val raw = spark.range(0, 300, 1, 4)
       .select(col("id").as("k"), (col("id") % 11).as("g"))
@@ -190,10 +199,11 @@ object PinClusterDrill {
     val built = new PipelineRunner(spark, registry, Map("raw" -> raw)).run(Seq("out"))
     val pipeline = built("out")
 
-    val consumers = Seq("pagerank" -> pagerank, "hits" -> hits, "pipeline" -> pipeline)
+    val graphs = Seq("pagerank" -> pagerank, "hits" -> hits, "labelprop" -> labelprop,
+      "paths" -> paths, "closure" -> closure, "kcore" -> kcore)
+    val consumers = graphs :+ ("pipeline" -> pipeline)
     consumers.foreach { case (k, df) => emit(k, rows(df)) }
-    storage("pagerank", pagerank)
-    storage("hits", hits)
+    graphs.foreach { case (k, df) => storage(k, df) }
     storage("seam", built("seam"))
 
     // Eager cut, then (non-local) lose an executor before its consumer runs.
