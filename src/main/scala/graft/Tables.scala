@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.BaseRelation
 
-/** Test-table access, the local session and the repo/testdata paths
-  * shared by Verify/Bench/tools/tests: each is decided here and nowhere
-  * else.
+/** Test-table access, the local session, the session configs (the
+  * streaming checkpoint file manager among them) and the repo/testdata
+  * paths shared by Verify/Bench/tools/tests: each is decided here and
+  * nowhere else.
   *
   * The synthetic `events` table carries nanosecond parquet timestamps,
   * which Spark's vectorized reader rejects by default; sessions created
@@ -23,11 +24,23 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Configs every engine session should carry (local or cluster). */
+  /** The session conf that names Spark's streaming checkpoint file manager. */
+  val checkpointFileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Configs every engine session should carry (local or cluster).
+    *
+    * The checkpoint file manager is [[graft.streaming.CheckpointFiles]]:
+    * Spark's default renames each local checkpoint file through Hadoop's
+    * FileContext, which forks `readlink` processes on every rename when
+    * Hadoop has no native library. A streaming micro-batch writes its
+    * offset and commit logs and a state file per partition, and those
+    * forks took about half of each batch's time.
+    */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    checkpointFileManagerKey -> classOf[graft.streaming.CheckpointFiles].getName
   )
 
   /** Local cores: `SPARK_GRAFT_CPUS` when set, else the host's. */

@@ -1,6 +1,9 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.internal.SQLConf
 
 /** The `pdcm_api` view surface over the ENTITY DAG — the Spark analog of
   * the reference's Postgres view layer (`scripts/views.sql:66-1200`),
@@ -522,6 +525,10 @@ object PdcmApi {
     * is registered (nothing filtered). Views whose base entities are
     * absent from `entities` are skipped (a caller running a sub-DAG gets
     * the sub-surface); returns the view names actually created.
+    *
+    * A view that names a relation which is not a registered temp view is
+    * skipped after parsing, without analysis: in a sub-DAG most views
+    * are, and analysing each only to fail took half of registration.
     */
   def register(
       spark: SparkSession,
@@ -532,14 +539,37 @@ object PdcmApi {
         """SELECT CAST(null AS STRING) AS data_source,
            CAST(null AS STRING) AS molecular_data_table WHERE 1 = 0""")
         .createOrReplaceTempView("molecular_data_restriction")
+    val catalog = spark.sessionState.catalog
     viewSql.flatMap { case (name, sql) =>
       val viewName = s"pdcm_api_$name"
-      try {
+      val plan = spark.sessionState.sqlParser.parsePlan(sql)
+      if (!relationNames(plan).forall(n => catalog.getTempView(n).isDefined)) None
+      else try {
         spark.sql(s"CREATE OR REPLACE TEMP VIEW $viewName AS $sql")
         Some(viewName)
       } catch {
         case _: org.apache.spark.sql.AnalysisException => None
       }
     }
+  }
+
+  /** The unqualified relations a parsed query reads, in subqueries and
+    * CTE bodies too, less the names its CTEs define. A qualified name is
+    * left to analysis.
+    */
+  private def relationNames(plan: LogicalPlan): Set[String] = {
+    def walk(p: LogicalPlan): Seq[LogicalPlan] = {
+      val inner = p match {
+        case w: UnresolvedWith => w.cteRelations.map(_._2)
+        case _ => Nil
+      }
+      p +: (p.children ++ inner ++ p.subqueries).flatMap(walk)
+    }
+    val nodes = walk(plan)
+    val ctes = nodes.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }.flatten
+    val resolver = SQLConf.get.resolver
+    nodes.collect { case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        r.multipartIdentifier.head }
+      .filterNot(n => ctes.exists(resolver(_, n))).toSet
   }
 }

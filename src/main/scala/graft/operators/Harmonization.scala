@@ -84,7 +84,8 @@ object Harmonization {
     val rank =
       if (groups.size == 1) col("__rank0") else least(groups.map(g => col(s"__rank$g")): _*)
     def fromWinner(c: String): Column =
-      groups.foldRight(lit(null): Column) { (g, rest) =>
+      if (groups.size == 1) col(s"__${c}0")
+      else groups.foldRight(lit(null): Column) { (g, rest) =>
         when(col(s"__rank$g") === rank, col(s"__$c$g")).otherwise(rest)
       }
     val matchStage = ranked.foldRight(lit(null).cast("string")) { case ((st, i), rest) =>

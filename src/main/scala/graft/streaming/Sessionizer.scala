@@ -14,6 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * With event-time timeout, sessions also close when the watermark passes
   * `gap` after the last event — bounded state at any scale (state size is
   * O(active users), not O(events)).
+  *
+  * The state store keeps [[SessionState]] rows and the output schema is
+  * [[Session]]'s: changing either case class breaks every existing
+  * checkpoint, which then has to be discarded and the stream replayed.
   */
 object Sessionizer {
 

@@ -7,9 +7,9 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One decision point each for the local session, the machine's paths
-  * and the test-table reader: `Tables.scala` is the only source that
-  * makes any of these decisions.
+/** One decision point each for the local session, the machine's paths,
+  * the test-table reader and the streaming checkpoint file manager:
+  * `Tables.scala` is the only source that makes any of these decisions.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -52,5 +52,13 @@ class LintSpec extends AnyFunSuite {
     val found = hits(src.resolve("main"), tableRead)
     assert(found.isEmpty,
       s"read test tables with Tables.load:\n${found.mkString("\n")}")
+  }
+
+  test("lint: only Tables.scala names the checkpoint file manager conf") {
+    // Assembled, so that this file does not match itself.
+    val key = Regex.quote("checkpointFileManager" + "Class").r
+    val found = hits(src, key)
+    assert(found.isEmpty,
+      s"name the manager in Tables.sessionConfigs only:\n${found.mkString("\n")}")
   }
 }

@@ -113,6 +113,126 @@ class StreamingSpec extends SparkSpec {
     assert(deduped.count() == events.count())
   }
 
+  /** Restart drill input: events `from` until `until` of a sequence in
+    * time order, 3 s apart, with the clock jumping 30 minutes every 200
+    * rows so that sessions close. Rows 2k and 2k+1 share an event id;
+    * five users take turns.
+    */
+  private def drillRows(from: Long, until: Long) = spark.range(from, until, 1, 1).select(
+    ($"id" / 2).cast("long").as("event_id"),
+    timestamp_seconds(lit(1704067200L) + $"id" * 3 + ($"id" / 200).cast("long") * 1800)
+      .as("ts"),
+    ($"id" % 5).as("user_id"),
+    element_at(typedLit(Seq("view", "click", "purchase", "signup", "error")),
+      (pmod(xxhash64($"id"), lit(5L)) + 1).cast("int")).as("event_type"),
+    (($"id" % 500) / 10.0).as("value"),
+    lit("{}").as("props"))
+
+  private lazy val drillEvents = drillRows(0, 2000)
+
+  /** The drill's four input files: each split falls between the two rows
+    * of one event id, and the restart falls after the second file.
+    */
+  private val drillSplits = Seq(0L, 501L, 1001L, 1501L, 2000L)
+  private val drillRestartAfter = 2
+
+  /** Run `face` over `drillEvents` as a file stream, one file per
+    * micro-batch, on a local checkpoint: first over the files before the
+    * restart, then, after the rest are added, again from the same
+    * checkpoint. The rows each run emitted: in complete mode its last
+    * batch, else all its batches. (The memory sink cannot restart in
+    * append mode, so `foreachBatch` collects them.)
+    */
+  private def restartDrill(face: String, mode: String)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+    val src = Files.createTempDirectory(s"graft-restart-$face")
+    val ckpt = Files.createTempDirectory(s"graft-restart-$face-ckpt").toString
+    // One parquet file per split, moved into place with increasing
+    // modification times: the file source takes them in that order.
+    def add(i: Int): Unit = {
+      val tmp = Files.createTempDirectory(s"graft-restart-$face-$i").resolve("f").toString
+      drillRows(drillSplits(i), drillSplits(i + 1)).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = src.resolve(f"$i%02d.parquet")
+      Files.move(part.toPath, dst)
+      assert(dst.toFile.setLastModified(System.currentTimeMillis() - 60000 + i * 1000))
+    }
+    var lastBatch = -1L
+    def run(files: Range): Seq[org.apache.spark.sql.Row] = {
+      files.foreach(add)
+      val name = s"restart_${face}_${files.head}"
+      val emitted = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[Seq[org.apache.spark.sql.Row]]())
+      val q = f(spark.readStream.schema(drillEvents.schema).option("maxFilesPerTrigger", 1)
+          .parquet(src.toString))
+        .writeStream.queryName(name).outputMode(mode)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          emitted.add(df.collect().toSeq); ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), s"$name did not finish")
+      assert(q.exception.isEmpty, q.exception)
+      // One batch per file, numbered on from the previous run's.
+      val withData = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+      assert(withData.size == files.size && withData.head == lastBatch + 1,
+        s"$name: batches with data $withData after batch $lastBatch")
+      lastBatch = q.recentProgress.map(_.batchId).max
+      import scala.jdk.CollectionConverters._
+      val batches = emitted.asScala.toSeq
+      if (mode == "complete") batches.last else batches.flatten
+    }
+    val first = run(0 until drillRestartAfter)
+    (first, run(drillRestartAfter until drillSplits.size - 1))
+  }
+
+  test("restart from checkpoint: window agg keeps its counts") {
+    val (first, second) = restartDrill("agg", "complete")(EventStreams.slidingRates(_))
+    val batch = EventStreams.slidingRates(drillEvents).collect().toSet
+    // Complete mode: the restarted run's last table is the whole answer.
+    assert(first.nonEmpty && first.toSet != batch)
+    assert(second.size == batch.size && second.toSet == batch)
+  }
+
+  test("restart from checkpoint: dedup emits each event id once") {
+    val (first, second) = restartDrill("dedup", "append")(EventStreams.dedupedEvents(_))
+    val ids = (first ++ second).map(_.getAs[Long]("event_id")).sorted
+    assert(first.nonEmpty && second.nonEmpty)
+    assert(ids == EventStreams.dedupedEvents(drillEvents).select("event_id").as[Long]
+      .collect().toSeq.sorted)
+  }
+
+  test("restart from checkpoint: stream-stream join matches the batch join") {
+    def join(e: org.apache.spark.sql.DataFrame) =
+      EventStreams.purchaseAttribution(e, e, beforeSeconds = 600)
+    val (first, second) = restartDrill("join", "append")(join)
+    def rows(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+    assert(first.nonEmpty && second.nonEmpty)
+    assert(rows(first ++ second) == rows(join(drillEvents).collect().toSeq))
+  }
+
+  test("restart from checkpoint: sessionizer emits closed sessions, one spanning the restart") {
+    import graft.streaming.Sessionizer
+    def sessions(e: org.apache.spark.sql.DataFrame) =
+      Sessionizer.sessionize(Sessionizer.fromEventsTable(spark, e), 600,
+        streaming = e.isStreaming).toDF()
+    val (first, second) = restartDrill("state", "append")(sessions)
+    def rows(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r =>
+      (r.getLong(0), r.getTimestamp(1).getTime, r.getTimestamp(2).getTime, r.getLong(3)))
+    val streamed = rows(first ++ second)
+    val batch = rows(sessions(drillEvents).collect().toSeq).toSet
+    // Sessions still open at the last watermark stay in state.
+    assert(first.nonEmpty && second.nonEmpty)
+    assert(streamed.distinct.size == streamed.size && streamed.toSet.subsetOf(batch))
+    // The session that began before the restart and went on after it.
+    val restartMs = drillRows(drillSplits(drillRestartAfter), drillSplits(drillRestartAfter) + 1)
+      .select("ts").as[java.sql.Timestamp].head().getTime
+    val spanning = batch.filter { case (_, start, end, _) => start < restartMs && end >= restartMs }
+    assert(spanning.nonEmpty && spanning.subsetOf(streamed.toSet), spanning)
+  }
+
   test("streaming near-dup candidates match batch; exact dups surface") {
     import graft.streaming.StreamingNearDup
     import graft.streaming.StreamingNearDup.DocEvent
