@@ -35,12 +35,19 @@ object Tables {
     * Hadoop has no native library. A streaming micro-batch writes its
     * offset and commit logs and a state file per partition, and those
     * forks took about half of each batch's time.
+    *
+    * ICU case mappings are off: with them on, the first `lower`/`upper`
+    * in a JVM initializes Spark's `CollationAwareUTF8String`, which
+    * title-cases every Unicode code point with ICU (1.7-1.9 s, on one
+    * executor thread while the others wait); the JVM's mappings agree with
+    * ICU's root-locale ones on the strings graft lowers (`TablesSpec`).
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    checkpointFileManagerKey -> classOf[graft.streaming.CheckpointFiles].getName
+    checkpointFileManagerKey -> classOf[graft.streaming.CheckpointFiles].getName,
+    "spark.sql.icu.caseMappings.enabled" -> "false"
   )
 
   /** Local cores: `SPARK_GRAFT_CPUS` when set, else the host's. */

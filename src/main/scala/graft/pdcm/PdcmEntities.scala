@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions.{Cleaning, Ids}
 import graft.graph.OntologyGraph
 import graft.operators.{Harmonization, Relational}
-import graft.pipeline.{EntityDef, EntityRegistry}
+import graft.pipeline.{EntityDef, EntityRegistry, LazySources}
 import graft.sources.{ExternalResources, MappingRules, Obo, Ontolia, Tsv}
 
 /** The PDCM entity DAG: the reference's central entity transforms
@@ -1519,12 +1519,15 @@ object PdcmEntities {
     * (`<root>/<provider>/<module>.tsv`), with empty-input fallback.
     * Shared ontology inputs (`ncit.obo`, `ontolia.txt`,
     * `diagnosis_mappings.json`) live at the root; a missing file degrades
-    * to a typed empty frame like every other module (S5).
+    * to a typed empty frame like every other module (S5). Each source is
+    * read on its first lookup ([[LazySources]]), so a run reads only the
+    * modules its targets need, and a failed read names the module and
+    * its file.
     */
   def sources(spark: SparkSession, root: String): Map[String, DataFrame] =
     // raw_source is read from the provider YAMLs (ontologySources), not
     // globbed as a TSV.
-    (rawSchemas - "raw_source").map { case (name, cols) =>
+    LazySources((rawSchemas - "raw_source").toSeq.map { case (name, cols) =>
       val paths = name.stripPrefix("raw_") match {
         case "drug_dosing"       => Seq(s"$root/*/drug-dosing.tsv")
         case "patient_treatment" => Seq(s"$root/*/patient-treatment.tsv")
@@ -1534,15 +1537,18 @@ object PdcmEntities {
         case "chembl_lookup"     => Seq(s"$root/chembl_lookup.tsv")
         case m                   => Seq(s"$root/*/$m.tsv")
       }
-      name -> Tsv.read(spark, paths, cols, commentField = Some(cols.head))
-    } ++ ontologySources(spark, root)
+      (name, paths.mkString(", "),
+        () => Tsv.read(spark, paths, cols, commentField = Some(cols.head)))
+    } ++ ontologySources(spark, root))
 
+  /** The root-level sources as (name, origin, build). */
   private def ontologySources(
-      spark: SparkSession, root: String): Map[String, DataFrame] = {
-    def ifExists(path: String, orElse: => DataFrame)(
-        read: String => DataFrame): DataFrame =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) read(path)
-      else orElse
+      spark: SparkSession, root: String): Seq[(String, String, () => DataFrame)] = {
+    def ifExists(name: String, path: String, orElse: => DataFrame)(
+        read: String => DataFrame): (String, String, () => DataFrame) =
+      (name, path, () =>
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) read(path)
+        else orElse)
     def empty(schema: StructType): DataFrame =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val oboSchema = StructType(Seq(
@@ -1555,21 +1561,19 @@ object PdcmEntities {
       StructField("data_source", StringType), StructField("diagnosis", StringType),
       StructField("primary_site", StringType), StructField("tumour_type", StringType),
       StructField("mapped_term_id", StringType)))
-    Map(
-      "raw_obo" -> ifExists(s"$root/ncit.obo", empty(oboSchema))(
-        Obo.read(spark, _)),
-      "raw_ontolia" -> ifExists(s"$root/ontolia.txt", empty(ontoliaSchema))(
+    Seq(
+      ifExists("raw_obo", s"$root/ncit.obo", empty(oboSchema))(Obo.read(spark, _)),
+      ifExists("raw_ontolia", s"$root/ontolia.txt", empty(ontoliaSchema))(
         Ontolia.read(spark, _)),
-      "raw_diagnosis_mappings" -> ifExists(
-        s"$root/diagnosis_mappings.json", empty(mappingSchema))(
-        MappingRules.readDiagnosisRules(spark, _)),
-      "raw_external_resources" ->
-        ExternalResources.resourcesTable(spark, DefaultResources),
-      "raw_downloaded_resources" -> ExternalResources.readDownloaded(
-        spark, root, DefaultResources, DefaultDownloadConfs),
+      ifExists("raw_diagnosis_mappings", s"$root/diagnosis_mappings.json",
+        empty(mappingSchema))(MappingRules.readDiagnosisRules(spark, _)),
+      ("raw_external_resources", "the default resource list",
+        () => ExternalResources.resourcesTable(spark, DefaultResources)),
+      ("raw_downloaded_resources", s"$root/externalDBs", () =>
+        ExternalResources.readDownloaded(spark, root, DefaultResources, DefaultDownloadConfs)),
       // Provider source YAMLs via the S6 module reader, in the
       // rawSchemas column layout.
-      "raw_source" -> {
+      ("raw_source", s"$root/*/source.yaml", () => {
         val providerYamls = Option(new java.io.File(root).listFiles())
           .getOrElse(Array.empty[java.io.File])
           .filter(_.isDirectory)
@@ -1579,6 +1583,6 @@ object PdcmEntities {
           }.toMap
         graft.sources.Yaml.readModule(spark, providerYamls,
           rawSchemas("raw_source"))
-      })
+      }))
   }
 }

@@ -40,7 +40,11 @@ import org.apache.spark.storage.StorageLevel
   * the plan is truncated exactly as in the eager form, but a fixed-round
   * iteration chains its rounds into one job instead of paying a driver
   * barrier per round. Use eager only when something must happen after
-  * the rows exist (e.g. releasing caches the plan depends on).
+  * the rows exist (e.g. releasing caches the plan depends on), or when
+  * several jobs may start over the cut at once: `PipelineRunner` cuts
+  * its seams and targets eagerly because their consumers are built
+  * concurrently, and consumer jobs would otherwise race for the lazy
+  * cut's partitions, the tasks of all but one waiting on each block.
   */
 object Pin {
 

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One decision point each for the local session, the machine's paths,
   * the test-table reader and the streaming checkpoint file manager:
   * `Tables.scala` is the only source that makes any of these decisions.
+  * Driver-side concurrency has its own: only `EntityPipeline.scala`
+  * creates a thread pool.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -17,16 +19,19 @@ class LintSpec extends AnyFunSuite {
   private val src = Paths.get(Tables.repoDir, "src")
   private val tables = src.resolve(Paths.get("main", "scala", "graft", "Tables.scala"))
 
+  private val pipeline = src.resolve(Paths.get("main", "scala", "graft", "pipeline",
+    "EntityPipeline.scala"))
+
   /** `file:line: text` for every line of a Scala file under `dir`,
-    * other than `Tables.scala`, that `pattern` matches.
+    * other than `owner` (`Tables.scala` by default), that `pattern` matches.
     */
-  private def hits(dir: Path, pattern: Regex): List[String] = {
-    assert(Files.isRegularFile(tables), s"no Tables.scala under $src")
+  private def hits(dir: Path, pattern: Regex, owner: Path = tables): List[String] = {
+    assert(Files.isRegularFile(owner), s"no $owner")
     val files = Files.walk(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList
     assert(files.size > 100, s"scanned only ${files.size} Scala files under $dir")
     for {
-      f <- files if f != tables
+      f <- files if f != owner
       (line, i) <- Files.readAllLines(f).asScala.toList.zipWithIndex
       if pattern.findFirstIn(line).nonEmpty
     } yield s"${src.relativize(f)}:${i + 1}: ${line.trim}"
@@ -60,5 +65,13 @@ class LintSpec extends AnyFunSuite {
     val found = hits(src, key)
     assert(found.isEmpty,
       s"name the manager in Tables.sessionConfigs only:\n${found.mkString("\n")}")
+  }
+
+  test("lint: only EntityPipeline.scala creates a thread pool under src/main") {
+    // A single `new Thread` (SkewDrill's) is not a pool.
+    val pool = """Executors\s*\.|ExecutionContext\s*\.\s*(from|global|Implicits)|ForkJoinPool|ThreadPoolExecutor""".r
+    val found = hits(src.resolve("main"), pool, owner = pipeline)
+    assert(found.isEmpty,
+      s"run concurrent driver work through PipelineRunner:\n${found.mkString("\n")}")
   }
 }

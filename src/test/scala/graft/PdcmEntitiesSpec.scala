@@ -846,4 +846,43 @@ class PdcmEntitiesSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(solo == Map("M1" -> true, "M2" -> true, "M9" -> false))
   }
+
+  test("sources are read on demand: binding starts no job, a run reads only its closure") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = stage()
+    val probe = "graft.pdcm-entities-spec.probe"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty(probe)).foreach(started.put)
+    }
+    val sc = spark.sparkContext
+    def tagged[T](tag: String)(f: => T): T = {
+      sc.setLocalProperty(probe, tag)
+      try f finally sc.setLocalProperty(probe, null)
+    }
+    sc.addSparkListener(listener)
+    val (src, jobs) = try {
+      val src = tagged("sources")(PdcmEntities.sources(spark, root))
+      // Events reach the listener in posting order: a job started while
+      // binding is seen before the sentinel's start.
+      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      (src, Iterator.continually(started.poll(60, TimeUnit.SECONDS))
+        .map(j => Option(j).getOrElse(fail("the sentinel job was not seen")))
+        .takeWhile(_ != "sentinel").size)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs == 0, s"binding the sources started $jobs jobs")
+    assert(src.contains("raw_diagnosis_mappings") && src.keySet.size == src.size)
+
+    val mappings = Paths.get(root, "diagnosis_mappings.json")
+    Files.write(mappings, """{"mappings": [ {"data_source": "provA",""".getBytes)
+    val ok = new PipelineRunner(spark, PdcmEntities.registry(), PdcmEntities.sources(spark, root))
+      .run(Seq("mutation_data", "cna_data"))
+    assert(ok("mutation_data").count() > 0 && ok("cna_data").count() > 0)
+    val e = intercept[Exception](new PipelineRunner(spark, PdcmEntities.registry(),
+      PdcmEntities.sources(spark, root)).run(Seq("sample_to_ontology")))
+    assert(e.getMessage.contains("raw_diagnosis_mappings") &&
+      e.getMessage.contains(mappings.toString), e.getMessage)
+  }
 }

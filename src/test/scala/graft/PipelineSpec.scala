@@ -1,6 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{EntityDef, EntityRegistry, PipelineRunner}
 
@@ -89,5 +97,84 @@ class PipelineSpec extends SparkSpec {
     val e = intercept[NoSuchElementException](
       new PipelineRunner(spark, registry(), Map.empty).run(Seq("dim")))
     assert(e.getMessage.contains("raw") && e.getMessage.contains("dim"))
+  }
+
+  private def pipelineThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t =>
+      t.getName.startsWith("graft-pipeline-") && t.isAlive).map(_.getName).toSet
+
+  test("a fan-out seam is computed once while its consumers build side by side") {
+    val evals = spark.sparkContext.longAccumulator("seam row evaluations")
+    val counted = udf { (k: Long) => evals.add(1); k }.asNondeterministic()
+    val r = new EntityRegistry()
+      .register(EntityDef("seam", Seq("ids"), (_, in) =>
+        in("ids").select(counted($"id").as("k"), ($"id" % 7).as("g"))))
+      .register(EntityDef("sevens", Seq("seam"), (_, in) => in("seam").filter($"g" === 0)))
+      .register(EntityDef("evens", Seq("seam"), (_, in) => in("seam").filter($"k" % 2 === 0)))
+    assert(spark.sparkContext.defaultParallelism >= 2)
+    val out = new PipelineRunner(spark, r, Map("ids" -> spark.range(0, 4000, 1, 8).toDF()))
+      .run(Seq("sevens", "evens"))
+    // The seam was cut in its own worker, before its consumers started.
+    assert(evals.sum == 4000, s"run evaluated the seam's 4000 rows ${evals.sum} times")
+    // One action on each consumer, at the same time.
+    val counts = Seq("sevens", "evens").map(t => Future(out(t).count()))
+    assert(counts.map(Await.result(_, 2.minutes)) == Seq(572, 2000))
+    assert(out("seam").count() == 4000)
+    assert(evals.sum == 4000, s"the seam's 4000 rows were evaluated ${evals.sum} times")
+  }
+
+  test("a failing entity fails the run naming it, once every worker has stopped") {
+    val badRow = udf { (k: Long) =>
+      if (k == 7) throw new IllegalArgumentException("bad row 7"); k
+    }
+    val workers = new LinkedBlockingQueue[String]()
+    // The failing entity is a target, so it is cut; one entity waits on it.
+    def failingAt(failing: String) = new EntityRegistry()
+      .register(EntityDef("ok", Seq("ids"), (_, in) => {
+        workers.put(Thread.currentThread.getName)
+        in("ids").withColumn("twice", $"id" * 2)
+      }))
+      .register(EntityDef("throws", Seq("ids"), (_, _) =>
+        throw new IllegalStateException("no plan for this entity")))
+      .register(EntityDef("failsJob", Seq("ids"), (_, in) => in("ids").select(badRow($"id"))))
+      .register(EntityDef("downstream", Seq(failing), (_, in) => in(failing)))
+    val ids = spark.range(0, 100, 1, 4).toDF()
+    for ((target, cause) <- Seq("throws" -> "no plan for this entity", "failsJob" -> "bad row 7")) {
+      val run = Future(new PipelineRunner(spark, failingAt(target), Map("ids" -> ids))
+        .run(Seq("ok", target, "downstream")))
+      val e = intercept[Exception](Await.result(run, 2.minutes))
+      assert(e.getMessage.contains(s"entity '$target'") && e.getMessage.contains(cause), e.getMessage)
+      assert(pipelineThreads.isEmpty, s"workers alive after run: $pipelineThreads")
+    }
+    assert(workers.asScala.nonEmpty && workers.asScala.forall(_.startsWith("graft-pipeline-")))
+  }
+
+  test("jobs the runner starts carry the caller's job group and local properties") {
+    val probe = "graft.pipeline-spec.probe"
+    val jobs = new LinkedBlockingQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put((e.properties.getProperty("spark.jobGroup.id"), e.properties.getProperty(probe)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-pipeline-spec", "runner jobs")
+      sc.setLocalProperty(probe, "run")
+      try new PipelineRunner(spark, registry(), Map("raw" -> raw)).run(Seq("fact", "helper"))
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty(probe, null)
+      }
+      // Events reach the listener in posting order: every job of the run
+      // has been seen once the sentinel's start is.
+      sc.setLocalProperty(probe, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(probe, null)
+      val seen = Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
+        .map(j => Option(j).getOrElse(fail("the sentinel job was not seen")))
+        .takeWhile(_._2 != "sentinel").toList
+      assert(seen.size >= 2, "the run's two cuts started no job") // fact and helper
+      assert(seen.forall(_ == (("graft-pipeline-spec", "run"))), seen)
+    } finally sc.removeSparkListener(listener)
   }
 }

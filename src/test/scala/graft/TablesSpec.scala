@@ -136,4 +136,21 @@ class TablesSpec extends SparkSpec {
     SqlViews.register(s2, sfDir)
     assert(s2.catalog.tableExists("order_facts") && s1.catalog.tableExists("order_facts"))
   }
+
+  test("case mapping without ICU agrees with ICU's root locale") {
+    import com.ibm.icu.lang.UCharacter
+    import com.ibm.icu.util.ULocale
+    assert(spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false")
+    // ASCII, German sharp s, Greek with a final sigma, dotted capital I,
+    // the titlecase digraph, a ligature and mixed text.
+    val words = Seq("Patient-Derived Xenograft", "sample_origin 42", "Straße", "ΣΑΣ",
+      "ΟΔΟΣ ΣΑΣ", "İ", "İstanbul", "ǅ", "ǅemal", "ﬁne", "Ünïcödé Mixed")
+    val got = words.toDF("s").select($"s", lower($"s"), upper($"s")).as[(String, String, String)]
+      .collect()
+    assert(got.length == words.size)
+    got.foreach { case (s, lo, up) =>
+      assert(lo == UCharacter.toLowerCase(ULocale.ROOT, s), s"lower($s)")
+      assert(up == UCharacter.toUpperCase(ULocale.ROOT, s), s"upper($s)")
+    }
+  }
 }
