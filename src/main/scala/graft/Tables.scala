@@ -29,12 +29,18 @@ object Tables {
 
   /** Configs every engine session should carry (local or cluster).
     *
-    * The checkpoint file manager is [[graft.streaming.CheckpointFiles]]:
-    * Spark's default renames each local checkpoint file through Hadoop's
-    * FileContext, which forks `readlink` processes on every rename when
-    * Hadoop has no native library. A streaming micro-batch writes its
-    * offset and commit logs and a state file per partition, and those
-    * forks took about half of each batch's time.
+    * The checkpoint file manager is [[graft.streaming.CheckpointFiles]].
+    * When Hadoop has no native library, its local filesystem forks a
+    * process for two steps of every checkpoint file, and on a local path
+    * this manager avoids both: Spark's default renames each file through
+    * Hadoop's FileContext, which forks `readlink` (the manager renames
+    * through the FileSystem API instead), and Hadoop sets each created
+    * file's mode by forking `chmod` (the manager sets it in-process). A
+    * streaming micro-batch writes its offset and commit logs and a state
+    * file per partition, and those forks took about half of each batch's
+    * time. The `.crc` files, Spark's state file checksums and the
+    * temp-file-then-rename writes are unchanged, and other schemes keep
+    * Spark's choice.
     *
     * ICU case mappings are off: with them on, the first `lower`/`upper`
     * in a JVM initializes Spark's `CollationAwareUTF8String`, which

@@ -255,6 +255,12 @@ object PdcmEntities {
     },
     outputColumns = Seq("id", "term_id", "term_name", "ancestors"))
 
+  /** The type of a molecular row's link arrays, built here so that no
+    * table build parses a type string.
+    */
+  private val LinkArray: DataType = ArrayType(StructType(
+    Seq("column", "resource", "link").map(StructField(_, StringType))))
+
   /** Molecular-data table template (mutation/expression/cna/biomarker all
     * share it — reference `initial_*_transformer_job.py` +
     * `molecular_characterization_fk_assigner.py:10-39`): gene symbols
@@ -293,7 +299,6 @@ object PdcmEntities {
       // and broadcast back — never a per-corpus-row join; entries sort
       // (column, resource, link) where the reference's collect_list
       // order is partition-accidental.
-      val linkStruct = "array<struct<column:string,resource:string,link:string>>"
       val res = in("raw_downloaded_resources").filter(col("link").isNotNull)
       val geneAgg = res.filter(col("type") === "Gene")
         .groupBy(col("entry").as("gene_entry"))
@@ -306,7 +311,7 @@ object PdcmEntities {
           all("harmonized_symbol") === geneAgg("gene_entry"), "left")
         .drop("gene_entry")
       val withLinks0 =
-        if (!hasAac) withGene.withColumn("var_links", lit(null).cast(linkStruct))
+        if (!hasAac) withGene.withColumn("var_links", lit(null).cast(LinkArray))
         else {
           val varAgg = res.filter(col("type") === "Variant")
             .groupBy(col("entry").as("var_entry"))
@@ -316,15 +321,15 @@ object PdcmEntities {
           // Alias-qualified: both sides carry raw_downloaded_resources
           // lineage (gene/variant branches of the same source).
           withGene.as("wg").join(broadcast(varAgg.as("va")),
-            expr("concat(wg.harmonized_symbol, ' ', wg.amino_acid_change)" +
-              " = va.var_entry"), "left")
+            concat(col("wg.harmonized_symbol"), lit(" "), col("wg.amino_acid_change")) ===
+              col("va.var_entry"), "left")
             .drop("var_entry")
         }
-      val emptyLinks = array().cast(linkStruct)
+      val emptyLinks = array().cast(LinkArray)
       val withLinks = withLinks0
         .withColumn("external_db_links",
           when(col("gene_links").isNull && col("var_links").isNull,
-            lit(null).cast("string"))
+            lit(null).cast(StringType))
             .otherwise(to_json(concat(
               coalesce(col("gene_links"), emptyLinks),
               coalesce(col("var_links"), emptyLinks)))))

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the test-table reader and the streaming checkpoint file manager:
   * `Tables.scala` is the only source that makes any of these decisions.
   * Driver-side concurrency has its own: only `EntityPipeline.scala`
-  * creates a thread pool.
+  * creates a thread pool. So does the local-file permission policy: only
+  * `CheckpointFiles.scala` subclasses Hadoop's raw local filesystem or
+  * names the `file` scheme's filesystem class.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -21,6 +23,9 @@ class LintSpec extends AnyFunSuite {
 
   private val pipeline = src.resolve(Paths.get("main", "scala", "graft", "pipeline",
     "EntityPipeline.scala"))
+
+  private val checkpointFiles = src.resolve(Paths.get("main", "scala", "graft", "streaming",
+    "CheckpointFiles.scala"))
 
   /** `file:line: text` for every line of a Scala file under `dir`,
     * other than `owner` (`Tables.scala` by default), that `pattern` matches.
@@ -65,6 +70,17 @@ class LintSpec extends AnyFunSuite {
     val found = hits(src, key)
     assert(found.isEmpty,
       s"name the manager in Tables.sessionConfigs only:\n${found.mkString("\n")}")
+  }
+
+  test("lint: only CheckpointFiles.scala decides how local files get their modes under src/main") {
+    // A subclass of the raw local filesystem, or the conf keys that pick
+    // the `file` scheme's class or bypass Hadoop's filesystem cache.
+    val policy = ("""extends\s+(org\.apache\.hadoop\.fs\.)?RawLocalFileSystem\b""" +
+      """|new\s+(org\.apache\.hadoop\.fs\.)?RawLocalFileSystem\s*(\(\s*\))?\s*\{""" +
+      """|fs\.file\.impl""").r
+    val found = hits(src.resolve("main"), policy, owner = checkpointFiles)
+    assert(found.isEmpty,
+      s"set local file modes through graft.streaming.CheckpointFiles:\n${found.mkString("\n")}")
   }
 
   test("lint: only EntityPipeline.scala creates a thread pool under src/main") {
